@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
+import org.apache.spark.sql.graft.SqlShims
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -358,7 +359,18 @@ object ScaleOps extends QueryModule {
     * ([[changeFeedSync]], [[readSnapshotChangeFeed]]) treat a
     * missing feed as "fall back to the full read", never as "no
     * changes" (an EMPTY committed feed, e.g. compaction's, means
-    * exactly no logical changes). */
+    * exactly no logical changes).
+    *
+    * The attempt-private writes are independent, so they run AT ONCE:
+    * the data files with their stats/Bloom pass on the calling thread,
+    * the feed's `ins` and `del` and the deletion vectors on a small
+    * daemon pool ([[SqlShims.submitCaptured]], which carries the
+    * caller's job group, description and active session to their
+    * jobs). All of them land before the manifest is written. On any
+    * failure the commit waits for every write, deletes only this
+    * attempt's debris and rethrows the original exception unwrapped;
+    * no version is committed. No write re-infers a schema: the stats
+    * and DV re-reads pass the schema of the frame they wrote. */
   private def commitVersion(s: SparkSession, root: String, df: DataFrame,
       parentLines: Seq[String], statsCol: Option[String],
       tag: Option[String], statsBloom: Boolean = false,
@@ -377,37 +389,63 @@ object ScaleOps extends QueryModule {
     val att = java.util.UUID.randomUUID().toString.take(8)
     val tmpData = new Path(rootP, s".tmp-data-v$next-$att")
     val dataDir = new Path(rootP, s"data-v$next-$att")
-    // `writeData = false` = a METADATA-ONLY commit (the pure MoR
-    // delete: new lines are re-pointed parent lines, no data moves).
-    // Spark deliberately writes one schema-carrying part file even
-    // for an empty frame, so "write an empty df" is NOT a no-op — it
-    // would add one stray empty file to the store per point delete.
-    if (writeData) {
-      df.write.mode("overwrite").parquet(tmpData.toString)
-      require(fs.rename(tmpData, dataDir), s"publish: data rename failed for v$next")
+    val dvDirName = s"dv-v$next-$att"
+    val tmpDv = new Path(rootP, s".tmp-dv-v$next-$att")
+    val tmpCh = new Path(rootP, s".tmp-changes-v$next-$att")
+    // Everything below up to the manifest write lands ATTEMPT-PRIVATE,
+    // so the independent writes run at once: the change feed's `ins`
+    // and `del` and the deletion vectors on the commit pool, the data
+    // files and their stats on this thread. A small commit is bound by
+    // its count of fixed-cost Spark jobs, not by bytes, so overlapping
+    // them shortens it. A failure anywhere waits for the
+    // rest, removes this attempt's debris and rethrows the original
+    // exception unwrapped (callers match on its type and message).
+    def debris(): Unit =
+      Seq(tmpData, dataDir, tmpDv, new Path(rootP, dvDirName), tmpCh)
+        .foreach(fs.delete(_, true))
+    // change feed: repartition(1) forces a schema-carrying part file
+    // even for empty row sets (a bare empty write can emit no part
+    // files, which an empty-feed read could not re-infer a schema from)
+    val feedWrites = cdf.toSeq.flatMap { case (ins, del) =>
+      Seq("ins" -> ins, "del" -> del).map { case (name, rows) =>
+        SqlShims.submitCaptured(s) {
+          commitTaskHook(name)
+          rows.repartition(1).write.mode("overwrite")
+            .parquet(new Path(tmpCh, name).toString)
+        }
+      }
     }
     // MERGE-ON-READ deletion vectors: `dvNew` carries the CUMULATIVE
     // (f, pos) deleted rows for a subset of parentLines' files — land
     // them attempt-private under the dir the re-pointed lines will
     // name (pre-commit, like data: the rename below publishes the
     // manifest that references it; a loser deletes its own dir).
-    val dvDirName = s"dv-v$next-$att"
-    val dvCounts: Map[String, Long] = dvNew match {
-      case None => Map.empty
-      case Some(rows) =>
-        val tmpDv = new Path(rootP, s".tmp-dv-v$next-$att")
+    val dvWrite = dvNew.map { rows =>
+      SqlShims.submitCaptured(s) {
+        commitTaskHook("dv")
         rows.write.mode("overwrite").parquet(tmpDv.toString)
-        val counts = s.read.parquet(tmpDv.toString)
+        val dvDir = new Path(rootP, dvDirName)
+        require(fs.rename(tmpDv, dvDir), s"publish: dv rename failed for v$next")
+        // counted from the renamed dir: Spark's file listing treats a
+        // dot-prefixed name as hidden
+        val counts = s.read.schema(rows.schema).parquet(dvDir.toString)
           .groupBy(col("f")).agg(count(lit(1)).as("n"))
           .collect() // bounded: one row per DV'd file
           .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (counts.isEmpty) { fs.delete(tmpDv, true); Map.empty }
-        else {
-          require(fs.rename(tmpDv, new Path(rootP, dvDirName)),
-            s"publish: dv rename failed for v$next")
-          counts
-        }
+        if (counts.isEmpty) fs.delete(dvDir, true)
+        counts
+      }
     }
+    val statsColumns: Seq[String] = statsCol.toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val written: Either[Throwable, Seq[String]] =
+      try Right(if (!writeData) Nil else writeDataFiles(s, df, tmpData,
+        dataDir, next, statsColumns, statsBloom))
+      catch { case e: Throwable => Left(e) }
+    written.left.toOption.orElse(firstFailure(feedWrites ++ dvWrite))
+      .foreach { e => debris(); throw e }
+    val newLines = written.toOption.get
+    val dvCounts: Map[String, Long] = dvWrite.fold(Map.empty[String, Long])(_.get())
     // re-point the named files' lines at THIS commit's dv dir (their
     // old field, if any, is superseded — dvNew is cumulative)
     val effectiveParent = parentLines.map { l =>
@@ -415,111 +453,6 @@ object ScaleOps extends QueryModule {
         case Some(n) => withDvField(l, dvDirName, n)
         case None => l
       }
-    }
-    val newStatus =
-      if (!writeData) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(dataDir)
-        .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-        .sortBy(_.getPath.toString)
-    val newFiles = newStatus.map(_.getPath.toString).toSeq
-    // per-file byte sizes, stamped on each manifest line (`sz:<n>`)
-    // so downstream byte-budget planning never re-stats the files
-    val sizeOf: Map[String, Long] =
-      newStatus.map(st => st.getPath.getName -> st.getLen).toMap
-    // `statsCol` may declare SEVERAL comma-separated columns; stats
-    // for all of them come from ONE projection-pruned pass (min/max
-    // per column per file), and Blooms for all of them from one more
-    // — the write amplification is two extra column-pruned scans of
-    // the just-written batch regardless of how many columns index.
-    val statsColumns: Seq[String] = statsCol.toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val bounds: Map[String, Seq[(String, Long, Long)]] =
-      if (statsColumns.isEmpty || newFiles.isEmpty) Map.empty
-      else {
-        val written = s.read.parquet(dataDir.toString)
-        // Each column's min/max in STAT SPACE ([[statSpaceAgg]]):
-        // integral columns as themselves, dates as epoch days,
-        // timestamps as epoch micros, strings as their raw min/max
-        // (encoded to the 8-byte prefix on the driver — the agg
-        // itself must compare FULL strings, or "ab…"/"ab…" ties
-        // would pick an arbitrary representative). A column with no
-        // stat-space mapping is skipped: its files go unstatted and
-        // pruned reads keep them, the standing degrade contract.
-        val statted = statsColumns.filter(c =>
-          statSpaceAgg(written.schema, c).isDefined)
-        val aggs = statted.flatMap { c =>
-          val (lo, hi) = statSpaceAgg(written.schema, c).get
-          Seq(lo.as(s"__lo_$c"), hi.as(s"__hi_$c"))
-        }
-        if (aggs.isEmpty) Map.empty
-        else written
-          .groupBy(input_file_name().as("f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val per = statted.flatMap { c =>
-              for {
-                lo <- statSpaceDecode(r.getAs[Any](s"__lo_$c"))
-                hi <- statSpaceDecode(r.getAs[Any](s"__hi_$c"))
-              } yield (c, lo, hi)
-            }
-            new Path(r.getString(0)).getName -> per
-          }.toMap
-      }
-    val blooms: Map[String, Map[String, String]] =
-      if (!statsBloom || statsColumns.isEmpty || newFiles.isEmpty) Map.empty
-      else {
-        // per file AND column, the ≤BLOOM_BITS distinct set-bit
-        // positions of the column's keys (map-side partial agg
-        // collapses each partition to ≤BLOOM_BITS rows per
-        // (file, column) before the exchange). Collect is bounded by
-        // newFiles · columns · BLOOM_BITS.
-        val tagged = statsColumns.map(c =>
-          struct(lit(c).as("c"), bloomPosArray(col(c)).as("ps")))
-        s.read.parquet(dataDir.toString)
-          .select(input_file_name().as("f"),
-            explode(array(tagged: _*)).as("cp"))
-          .select(col("f"), col("cp.c").as("c"),
-            explode(col("cp.ps")).as("pos")) // null ps (null key) drops
-          .groupBy(col("f"), col("c")).agg(collect_set(col("pos")).as("ps"))
-          .collect()
-          .groupBy(r => new Path(r.getString(0)).getName)
-          .map { case (f, rows) => f -> rows.map(r =>
-            r.getString(1) -> bloomHex(r.getSeq[Long](2))).toMap }
-      }
-    val newLines = newFiles.map { f =>
-      val name = new Path(f).getName
-      val per = bounds.getOrElse(name, Seq.empty)
-      val bl = blooms.getOrElse(name, Map.empty)
-      val sz = s"sz:${sizeOf(name)}"
-      if (statsColumns.size <= 1) {
-        // the legacy positional single-column form — existing stores,
-        // oracles and specs read it unchanged
-        (per.headOption, per.headOption.flatMap(p => bl.get(p._1))) match {
-          case (Some((_, lo, hi)), Some(bm)) => s"$f\t$lo\t$hi\t$bm\t$sz"
-          case (Some((_, lo, hi)), None) => s"$f\t$lo\t$hi\t$sz"
-          case _ => s"$f\t$sz"
-        }
-      } else {
-        val fields = per.map { case (c, lo, hi) =>
-          bl.get(c) match {
-            case Some(bm) => s"$c=$lo:$hi:$bm"
-            case None => s"$c=$lo:$hi"
-          }
-        }
-        ((f +: fields) :+ sz).mkString("\t")
-      }
-    }
-    // change feed lands attempt-private BEFORE the commit point;
-    // repartition(1) forces a schema-carrying part file even for
-    // empty row sets (a bare empty write can emit no part files,
-    // which an empty-feed read could not re-infer a schema from)
-    val tmpCh = new Path(rootP, s".tmp-changes-v$next-$att")
-    cdf.foreach { case (ins, del) =>
-      ins.repartition(1).write.mode("overwrite")
-        .parquet(new Path(tmpCh, "ins").toString)
-      del.repartition(1).write.mode("overwrite")
-        .parquet(new Path(tmpCh, "del").toString)
     }
     // The version's MERGED SCHEMA rides the manifest as a `#schema:`
     // header (with a `#ts:` commit stamp) so readers resolve both
@@ -680,6 +613,148 @@ object ScaleOps extends QueryModule {
     dvHeaderCache.keySet.removeIf(k => k._1 == qr && k._2 >= next)
     next
   }
+
+  /** The data half of [[commitVersion]]: write `df` under `tmpData`,
+    * rename it to the attempt's `dataDir`, and return one manifest
+    * line per new part file with its size and, per stats column, its
+    * zone-map bounds (and Bloom field when `statsBloom`).
+    *
+    * `writeData = false` callers skip this: a METADATA-ONLY commit
+    * (the pure MoR delete: new lines are re-pointed parent lines, no
+    * data moves). Spark deliberately writes one schema-carrying part
+    * file even for an empty frame, so "write an empty df" is NOT a
+    * no-op — it would add one stray empty file per point delete. */
+  private def writeDataFiles(s: SparkSession, df: DataFrame,
+      tmpData: org.apache.hadoop.fs.Path, dataDir: org.apache.hadoop.fs.Path,
+      next: Long, statsColumns: Seq[String], statsBloom: Boolean): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val fs = fsOf(s, dataDir)
+    commitTaskHook("data")
+    df.write.mode("overwrite").parquet(tmpData.toString)
+    require(fs.rename(tmpData, dataDir), s"publish: data rename failed for v$next")
+    val newStatus = fs.listStatus(dataDir)
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+      .sortBy(_.getPath.toString)
+    val newFiles = newStatus.map(_.getPath.toString).toSeq
+    // per-file byte sizes, stamped on each manifest line (`sz:<n>`)
+    // so downstream byte-budget planning never re-stats the files
+    val sizeOf: Map[String, Long] =
+      newStatus.map(st => st.getPath.getName -> st.getLen).toMap
+    // the re-reads below pass the written frame's schema: inferring it
+    // from the files just written would cost a Spark job per commit
+    def written = s.read.schema(df.schema).parquet(dataDir.toString)
+    // `statsColumns` may name SEVERAL columns; stats for all of them
+    // come from ONE projection-pruned pass (min/max per column per
+    // file), and Blooms for all of them from one more — the write
+    // amplification is two extra column-pruned scans of the
+    // just-written batch regardless of how many columns index.
+    val bounds: Map[String, Seq[(String, Long, Long)]] =
+      if (statsColumns.isEmpty || newFiles.isEmpty) Map.empty
+      else {
+        // Each column's min/max in STAT SPACE ([[statSpaceAgg]]):
+        // integral columns as themselves, dates as epoch days,
+        // timestamps as epoch micros, strings as their raw min/max
+        // (encoded to the 8-byte prefix after the collect — the agg
+        // itself must compare FULL strings, or "ab…"/"ab…" ties
+        // would pick an arbitrary representative). A column with no
+        // stat-space mapping is skipped: its files go unstatted and
+        // pruned reads keep them, the standing degrade contract.
+        val statted = statsColumns.filter(c =>
+          statSpaceAgg(df.schema, c).isDefined)
+        val aggs = statted.flatMap { c =>
+          val (lo, hi) = statSpaceAgg(df.schema, c).get
+          Seq(lo.as(s"__lo_$c"), hi.as(s"__hi_$c"))
+        }
+        if (aggs.isEmpty) Map.empty
+        else written
+          .groupBy(input_file_name().as("f"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect()
+          .map { r =>
+            val per = statted.flatMap { c =>
+              for {
+                lo <- statSpaceDecode(r.getAs[Any](s"__lo_$c"))
+                hi <- statSpaceDecode(r.getAs[Any](s"__hi_$c"))
+              } yield (c, lo, hi)
+            }
+            new Path(r.getString(0)).getName -> per
+          }.toMap
+      }
+    val blooms: Map[String, Map[String, String]] =
+      if (!statsBloom || statsColumns.isEmpty || newFiles.isEmpty) Map.empty
+      else {
+        // per file AND column, the ≤BLOOM_BITS distinct set-bit
+        // positions of the column's keys (map-side partial agg
+        // collapses each partition to ≤BLOOM_BITS rows per
+        // (file, column) before the exchange). Collect is bounded by
+        // newFiles · columns · BLOOM_BITS.
+        val tagged = statsColumns.map(c =>
+          struct(lit(c).as("c"), bloomPosArray(col(c)).as("ps")))
+        written
+          .select(input_file_name().as("f"),
+            explode(array(tagged: _*)).as("cp"))
+          .select(col("f"), col("cp.c").as("c"),
+            explode(col("cp.ps")).as("pos")) // null ps (null key) drops
+          .groupBy(col("f"), col("c")).agg(collect_set(col("pos")).as("ps"))
+          .collect()
+          .groupBy(r => new Path(r.getString(0)).getName)
+          .map { case (f, rows) => f -> rows.map(r =>
+            r.getString(1) -> bloomHex(r.getSeq[Long](2))).toMap }
+      }
+    newFiles.map { f =>
+      val name = new Path(f).getName
+      val per = bounds.getOrElse(name, Seq.empty)
+      val bl = blooms.getOrElse(name, Map.empty)
+      val sz = s"sz:${sizeOf(name)}"
+      if (statsColumns.size <= 1) {
+        // the legacy positional single-column form — existing stores,
+        // oracles and specs read it unchanged
+        (per.headOption, per.headOption.flatMap(p => bl.get(p._1))) match {
+          case (Some((_, lo, hi)), Some(bm)) => s"$f\t$lo\t$hi\t$bm\t$sz"
+          case (Some((_, lo, hi)), None) => s"$f\t$lo\t$hi\t$sz"
+          case _ => s"$f\t$sz"
+        }
+      } else {
+        val fields = per.map { case (c, lo, hi) =>
+          bl.get(c) match {
+            case Some(bm) => s"$c=$lo:$hi:$bm"
+            case None => s"$c=$lo:$hi"
+          }
+        }
+        ((f +: fields) :+ sz).mkString("\t")
+      }
+    }
+  }
+
+  /** Waits for EVERY future, then returns the first failure among them
+    * in list order, unwrapped from the future's ExecutionException —
+    * the commit's debris cleanup must not race a write still landing.
+    * An interrupt of the waiting thread is recorded as a failure and
+    * the wait goes on: the interrupting `stop()` also cancels the
+    * jobs behind these futures through their captured job group. */
+  private def firstFailure(
+      futures: Seq[java.util.concurrent.Future[_]]): Option[Throwable] = {
+    var first = Option.empty[Throwable]
+    var interrupt = Option.empty[InterruptedException]
+    futures.foreach { f =>
+      var done = false
+      while (!done) try { f.get(); done = true } catch {
+        case e: java.util.concurrent.ExecutionException =>
+          first = first.orElse(Some(e.getCause)); done = true
+        case e: InterruptedException =>
+          interrupt = interrupt.orElse(Some(e)); first = first.orElse(Some(e))
+      }
+    }
+    // an interrupt that is not the failure rethrown keeps its flag set
+    if (interrupt.exists(i => !first.contains(i)))
+      Thread.currentThread().interrupt()
+    first
+  }
+
+  /** Test instrumentation: called with "data", "ins", "del" or "dv" as
+    * each of a commit's concurrent writes starts, on the thread that
+    * runs it — a spec throws from here to fail exactly one of them. */
+  @volatile private[graft] var commitTaskHook: String => Unit = _ => ()
 
   /** BOUNDED RE-PLAN-AND-RETRY for commits that lose the optimistic
     * race: `body` plans against the CURRENT head and commits with
@@ -1295,7 +1370,7 @@ object ScaleOps extends QueryModule {
       case Some(sc) => s.read.schema(sc).parquet(files: _*)
       case None if merged =>
         s.read.option("mergeSchema", "true").parquet(files: _*)
-      case None => s.read.parquet(files: _*)
+      case None => readParquetPlain(s, files)
     }
     val dvd = lines.filter(dvOf(_).isDefined)
     if (dvd.isEmpty) rd(lines.map(_.split('\t')(0)))
@@ -1314,6 +1389,15 @@ object ScaleOps extends QueryModule {
       else masked.unionByName(rd(clean), allowMissingColumns = true)
     }
   }
+
+  /** `s.read.parquet(files)` without its schema-inference Spark job:
+    * the schema comes from the same single footer that inference
+    * would read ([[SqlShims.parquetFooterSchema]]), read in this
+    * process — a job saved on every snapshot read and lookup. */
+  private[graft] def readParquetPlain(s: SparkSession,
+      files: Seq[String]): DataFrame =
+    SqlShims.parquetFooterSchema(s, files)
+      .fold(s.read)(s.read.schema(_)).parquet(files: _*)
 
   /** DV-aware read of a FILE SUBSET of version `v` under an explicit
     * schema — the streaming source's bootstrap slices go through
@@ -1498,7 +1582,7 @@ object ScaleOps extends QueryModule {
     val base = if (kept.nonEmpty)
       readLinesDv(s, root, kept, schema = None, merged = false)
       // every file proven key-free: one footer for the schema, 0 rows
-      else s.read.parquet(lines.head.split('\t')(0)).limit(0)
+      else readParquetPlain(s, Seq(lines.head.split('\t')(0))).limit(0)
     base.filter(col(colName).isin(keys.distinct: _*))
   }
 
@@ -1874,7 +1958,7 @@ object ScaleOps extends QueryModule {
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"snapshot v$v not committed (have ${vs.mkString(",")})")
     if (!snapshotHasDvs(s, root, v)) // one header probe; keeps the
-      s.read.parquet(manifestFiles(s, root, v): _*) // plain scan plan
+      readParquetPlain(s, manifestFiles(s, root, v)) // plain scan plan
     else readLinesDv(s, root, manifestDataLines(s, root, v),
       schema = None, merged = false)
   }
@@ -2614,41 +2698,30 @@ object ScaleOps extends QueryModule {
   private def mergeIntoSnapshotAttempt(s: SparkSession, root: String,
       keyCols: Seq[String], updates: DataFrame, tag: Option[String],
       evolveSchema: Boolean, mode: String): Long = {
-    val dup = updates.agg(count(lit(1)).as("n"),
-      count_distinct(col(keyCols.head),
-        keyCols.tail.map(col): _*).as("k")).collect()(0) // bounded: one row
-    require(dup.getLong(0) == dup.getLong(1),
-      s"merge updates must have unique non-null '${keyCols.mkString(",")}' keys " +
-        s"(${dup.getLong(0)} rows, ${dup.getLong(1)} distinct keys)")
-    val vs = snapshotVersions(s, root)
-    // merging into an empty store bootstraps it: everything is an
-    // insert, so v1 = the batch (the CREATE TABLE AS face of MERGE)
-    if (vs.isEmpty)
-      return commitVersion(s, root, updates, parentLines = Nil,
-        statsCol = Some(keyCols.mkString(",")), tag, expectParent = Some(0L))
-    val v = vs.last
-    val lines = manifestDataLines(s, root, v)
-    // a rewrite keeps indexing every NAMED stats column the store
-    // already carries (plus its own keys), so a multi-column store's
-    // rewritten files don't silently lose their second zone map
-    val keepStats = (statsColumnsOf(s, root, v) ++ keyCols).distinct
-    val anyBounds = keyCols.exists(k => manifestBounds(s, root, v, k).nonEmpty)
-    // EVOLVE-ON-MERGE (the Delta mergeSchema composition of s14 and
-    // s11): with evolveSchema the batch may CARRY columns the store
-    // lacks — rewritten survivors null-fill them, untouched files
-    // stay physically column-free and [[readSnapshotMerged]]
-    // null-fills at read time. Without the flag a new column is a
-    // loud refusal (schema drift should be an explicit migration
-    // decision, not a typo's side effect). The reference schema is
-    // the VERSION's merged one — footer-only reads, and post-
-    // evolution files legitimately disagree column-wise.
-    val newCols = updates.columns.toSet --
-      readSnapshotMerged(s, root, Some(v)).columns.toSet
-    require(evolveSchema || newCols.isEmpty,
-      s"merge batch carries columns the store lacks (${newCols.mkString(",")}); " +
-        "pass evolveSchema=true to evolve, or project them away")
-    val (touched, untouched) = keysTouchedLines(s, root, v, lines,
-      updates, keyCols.map(k => k -> k))
+    // The duplicate-key check runs on the commit pool WHILE this
+    // thread plans the touched files: both are fixed-cost Spark jobs
+    // over the batch. Its refusal still wins — it is awaited before
+    // any planning outcome, failure included, is acted on.
+    val dupCheck = SqlShims.submitCaptured(s) {
+      val dup = updates.agg(count(lit(1)).as("n"),
+        count_distinct(col(keyCols.head),
+          keyCols.tail.map(col): _*).as("k")).collect()(0) // bounded: one row
+      require(dup.getLong(0) == dup.getLong(1),
+        s"merge updates must have unique non-null '${keyCols.mkString(",")}' keys " +
+          s"(${dup.getLong(0)} rows, ${dup.getLong(1)} distinct keys)")
+    }
+    val planned: Either[Throwable, Option[MergePlan]] =
+      try Right(planMerge(s, root, keyCols, updates, evolveSchema))
+      catch { case e: Throwable => Left(e) }
+    firstFailure(Seq(dupCheck)).orElse(planned.left.toOption)
+      .foreach(e => throw e)
+    val MergePlan(v, lines, keepStats, anyBounds, touched, untouched) =
+      planned.toOption.get.getOrElse {
+        // merging into an empty store bootstraps it: everything is an
+        // insert, so v1 = the batch (the CREATE TABLE AS face of MERGE)
+        return commitVersion(s, root, updates, parentLines = Nil,
+          statsCol = Some(keyCols.mkString(",")), tag, expectParent = Some(0L))
+      }
     if (touched.isEmpty)
       return commitVersion(s, root, updates, parentLines = untouched,
         statsCol = if (anyBounds) Some(keepStats.mkString(",")) else None,
@@ -2676,8 +2749,8 @@ object ScaleOps extends QueryModule {
     }
     // version's merged header schema: post-evolution, touched files
     // may disagree on columns among themselves — the header schema
-    // null-fills whatever any file physically lacks (the require
-    // above already decided whether NEW columns are allowed in)
+    // null-fills whatever any file physically lacks (planMerge's
+    // require already decided whether NEW columns are allowed in)
     val base = readTouched(s, root, v, touched)
     val survivors = base.join(updates.select(keyCols.map(col): _*),
       keyCols, "left_anti")
@@ -2690,6 +2763,47 @@ object ScaleOps extends QueryModule {
       parentLines = untouched,
       statsCol = if (anyBounds) Some(keepStats.mkString(",")) else None,
       tag, cdf = Some((updates, replaced)), expectParent = Some(v))
+  }
+
+  /** What [[mergeIntoSnapshotAttempt]] plans against the head `v`:
+    * its lines, the stats columns a rewrite keeps, whether any key
+    * carries zone maps, and the key-touched / untouched split. */
+  private case class MergePlan(v: Long, lines: Seq[String],
+      keepStats: Seq[String], anyBounds: Boolean,
+      touched: Seq[String], untouched: Seq[String])
+
+  /** The planning half of [[mergeIntoSnapshotAttempt]]; None for an
+    * empty store. */
+  private def planMerge(s: SparkSession, root: String, keyCols: Seq[String],
+      updates: DataFrame, evolveSchema: Boolean): Option[MergePlan] = {
+    val vs = snapshotVersions(s, root)
+    if (vs.isEmpty) return None
+    val v = vs.last
+    val lines = manifestDataLines(s, root, v)
+    // a rewrite keeps indexing every NAMED stats column the store
+    // already carries (plus its own keys), so a multi-column store's
+    // rewritten files don't silently lose their second zone map
+    val keepStats = (statsColumnsOf(s, root, v) ++ keyCols).distinct
+    val anyBounds = keyCols.exists(k => manifestBounds(s, root, v, k).nonEmpty)
+    // EVOLVE-ON-MERGE (the Delta mergeSchema composition of s14 and
+    // s11): with evolveSchema the batch may CARRY columns the store
+    // lacks — rewritten survivors null-fill them, untouched files
+    // stay physically column-free and [[readSnapshotMerged]]
+    // null-fills at read time. Without the flag a new column is a
+    // loud refusal (schema drift should be an explicit migration
+    // decision, not a typo's side effect). The reference schema is
+    // the VERSION's merged one: its `#schema:` header, or for a
+    // pre-header manifest the mergeSchema footer sweep — post-
+    // evolution files legitimately disagree column-wise.
+    val storeCols = snapshotSchema(s, root, v).map(_.fieldNames.toSeq)
+      .getOrElse(readSnapshotMerged(s, root, Some(v)).columns.toSeq)
+    val newCols = updates.columns.toSet -- storeCols
+    require(evolveSchema || newCols.isEmpty,
+      s"merge batch carries columns the store lacks (${newCols.mkString(",")}); " +
+        "pass evolveSchema=true to evolve, or project them away")
+    val (touched, untouched) = keysTouchedLines(s, root, v, lines,
+      updates, keyCols.map(k => k -> k))
+    Some(MergePlan(v, lines, keepStats, anyBounds, touched, untouched))
   }
 
   /** Batch-tagged IDEMPOTENT merge — [[snapshotAppendOnce]]'s

@@ -34,30 +34,71 @@ object Sinks {
   }
 
   /** A27 — stats sink: per micro-batch, drop @TransientSink-style
-    * columns and append to the warehouse path partitioned by a date
-    * column derived from stt, so re-runs overwrite deterministically
-    * (dynamic partition overwrite ⇒ idempotent under checkpoint
-    * replay — the exactly-once story for file warehouses).
-    * Mirrors ClickHouseUtil.java:17-50's reflective skip logic. */
+    * columns and add the batch's rows to the warehouse path,
+    * partitioned by a date column derived from stt. Each batch's files
+    * carry its foreachBatch id, so a checkpoint replay of the same id
+    * replaces exactly what its earlier attempt wrote and every other
+    * batch's windows of the same day stay (the exactly-once story for
+    * file warehouses). Mirrors ClickHouseUtil.java:17-50's reflective
+    * skip logic. */
   def statsSink(df: DataFrame, path: String, checkpoint: String,
       transientCols: Seq[String]): DataStreamWriter[Row] =
     df.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeStatsBatch(batch, path, transientCols)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeStatsBatch(batch, path, transientCols, batchId)
       }
 
-  /** The batch body of statsSink, callable directly in tests/batch.
-    * Dynamic partition overwrite is a PER-WRITE option here — setting
-    * it on the session would silently change overwrite semantics for
-    * every other partitioned write in the shared session. */
-  def writeStatsBatch(batch: DataFrame, path: String, transientCols: Seq[String]): Unit =
+  private def withDt(batch: DataFrame, transientCols: Seq[String]): DataFrame =
     batch.drop(transientCols: _*)
       .withColumn("dt", substring(col("stt"), 1, 10))
+
+  /** A WHOLE-TABLE batch write, callable directly in tests/batch: the
+    * rows replace every `dt` partition they touch (dynamic partition
+    * overwrite), so re-writing the same rows is idempotent. Dynamic
+    * partition overwrite is a PER-WRITE option here — setting it on
+    * the session would silently change overwrite semantics for every
+    * other partitioned write in the shared session. A stream must use
+    * the batch-id form below: with this one, each micro-batch would
+    * replace the day's earlier windows. */
+  def writeStatsBatch(batch: DataFrame, path: String, transientCols: Seq[String]): Unit =
+    withDt(batch, transientCols)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("dt")
       .parquet(path)
+
+  /** The statsSink body: micro-batch `batchId`'s rows are staged in a
+    * hidden directory under `path`, then each file is renamed into its
+    * `dt=` partition as `batch-<id>-<part file>`. Before the renames,
+    * every file an earlier attempt of the same id left in any
+    * partition is deleted, so a replay never duplicates rows, and
+    * files of other ids are never touched. Readers of `path` skip the
+    * `_`-prefixed staging directory. */
+  def writeStatsBatch(batch: DataFrame, path: String,
+      transientCols: Seq[String], batchId: Long): Unit = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(path)
+    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val stage = new Path(root, s"_staging-$batchId-${java.util.UUID.randomUUID()}")
+    val prefix = s"batch-$batchId-"
+    try {
+      withDt(batch, transientCols)
+        .write.mode(SaveMode.Overwrite).partitionBy("dt").parquet(stage.toString)
+      Option(fs.globStatus(new Path(root, s"dt=*/$prefix*")))
+        .foreach(_.foreach(st => fs.delete(st.getPath, false)))
+      fs.listStatus(stage).filter(d => d.isDirectory && d.getPath.getName.startsWith("dt="))
+        .foreach { d =>
+          val dst = new Path(root, d.getPath.getName)
+          fs.mkdirs(dst)
+          fs.listStatus(d.getPath).filter(_.getPath.getName.startsWith("part-"))
+            .foreach { f =>
+              val to = new Path(dst, prefix + f.getPath.getName)
+              require(fs.rename(f.getPath, to), s"stats sink: rename to $to failed")
+            }
+        }
+    } finally fs.delete(stage, true)
+  }
 
   /** A13 — dim upsert: MERGE-style overwrite by primary key against a
     * parquet dim snapshot (the Phoenix `upsert into` equivalent;

@@ -73,4 +73,62 @@ object SqlShims {
       : Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = true)
+
+  /** The snapshot commit's worker pool: a few DAEMON threads (the JVM
+    * exits without shutting it down), idle ones retired after a
+    * minute. Its tasks only run Spark jobs and file writes and never
+    * wait on one another, so a bounded pool cannot deadlock however
+    * many commits share it. */
+  private lazy val commitPool =
+    org.apache.spark.util.ThreadUtils.newDaemonCachedThreadPool(
+      "graft-snapshot-commit", 4, 60)
+
+  /** Run `body` on the commit pool with the CALLER's thread-local
+    * Spark state: the active session and the SparkContext local
+    * properties (job group, job description, scheduler pool, SQL
+    * execution nesting). Jobs launched by `body` therefore carry the
+    * caller's job group, so `cancelJobGroup` — a streaming query's
+    * `stop()` — cancels them like the caller's own. The future's
+    * `get` wraps a failure in an ExecutionException; the caller
+    * unwraps it. */
+  def submitCaptured[T](session: org.apache.spark.sql.SparkSession)(body: => T)
+      : java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      session.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      commitPool)(body)
+
+  /** The schema Spark's NON-merging Parquet inference would give a read
+    * of `files`, read in this process from ONE footer — the first file
+    * in path order, the one `ParquetUtils.inferSchema` picks — with
+    * the same converter settings, instead of the one-task Spark job
+    * the inference launches. None when `files` is empty or schema
+    * merging is on for the session (callers then let Spark infer, so
+    * both keep their old behaviour and errors). */
+  def parquetFooterSchema(session: org.apache.spark.sql.SparkSession, files: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val state = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val conf = state.conf
+    if (files.isEmpty || conf.isParquetSchemaMergingEnabled) None
+    else {
+      val hadoopConf = state.newHadoopConf()
+      val first = files.map { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(hadoopConf).makeQualified(p)
+      }.minBy(_.toString)
+      val footer = new org.apache.parquet.hadoop.Footer(first,
+        ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(first, hadoopConf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS))
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation =
+          conf.parquetReaderRespectUnknownTypeAnnotation)
+      Some(ParquetFileFormat.readSchemaFromFooter(footer, converter))
+    }
+  }
 }
