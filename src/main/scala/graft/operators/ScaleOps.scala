@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
+import graft.snapshot.{Manifest, ManifestEntry}
 import org.apache.spark.sql.graft.SqlShims
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -232,7 +233,7 @@ object ScaleOps extends QueryModule {
           expectParent = Some(p))
       case Some(p) =>
         commitVersion(s, root, df,
-          parentLines = manifestDataLines(s, root, p), statsCol, tag,
+          parentLines = Manifest.read(s, root, p).entries, statsCol, tag,
           statsBloom = statsBloom, expectParent = Some(p))
       case None =>
         commitVersion(s, root, df, parentLines = Nil, statsCol, tag,
@@ -312,23 +313,13 @@ object ScaleOps extends QueryModule {
     * line only — one open + one line, never the whole file list. */
   def manifestTag(s: SparkSession, root: String, v: Long): Option[String] = {
     tagProbes.incrementAndGet()
-    val man = new org.apache.hadoop.fs.Path(root, s"_manifests/v$v.manifest")
-    val fs = fsOf(s, man)
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(man), "UTF-8"))
-    try Option(in.readLine()).filter(_.startsWith(TAG_HEADER))
-      .map(_.stripPrefix(TAG_HEADER))
-    finally in.close()
+    Manifest.readTag(s, root, v)
   }
-
-  private val TAG_HEADER = "#tag:"
 
   /** Shared publish tail: land `df`'s files under an attempt-private
     * directory, commit `parentLines ++ newLines` as ONE manifest.
     *
-    * Manifest format: an optional `#tag:<tag>` header line, then one
-    * line per data file — `path` alone, or `path\tmin\tmax` when the
-    * file has zone-map stats for the store's stats column. Tag and
+    * The manifest's format is [[graft.snapshot.Manifest]]'s. Tag and
     * stats ride the manifest rename, so they are atomic with the file
     * list: no sidecar can be half-committed or clobbered by a racing
     * loser. Stats for the NEW files cost one projection-pruned scan
@@ -372,7 +363,7 @@ object ScaleOps extends QueryModule {
     * no version is committed. No write re-infers a schema: the stats
     * and DV re-reads pass the schema of the frame they wrote. */
   private def commitVersion(s: SparkSession, root: String, df: DataFrame,
-      parentLines: Seq[String], statsCol: Option[String],
+      parentLines: Seq[ManifestEntry], statsCol: Option[String],
       tag: Option[String], statsBloom: Boolean = false,
       parentRef: Option[Long] = None,
       cdf: Option[(DataFrame, DataFrame)] = None,
@@ -438,7 +429,7 @@ object ScaleOps extends QueryModule {
     }
     val statsColumns: Seq[String] = statsCol.toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val written: Either[Throwable, Seq[String]] =
+    val written: Either[Throwable, Seq[ManifestEntry]] =
       try Right(if (!writeData) Nil else writeDataFiles(s, df, tmpData,
         dataDir, next, statsColumns, statsBloom))
       catch { case e: Throwable => Left(e) }
@@ -448,12 +439,8 @@ object ScaleOps extends QueryModule {
     val dvCounts: Map[String, Long] = dvWrite.fold(Map.empty[String, Long])(_.get())
     // re-point the named files' lines at THIS commit's dv dir (their
     // old field, if any, is superseded — dvNew is cumulative)
-    val effectiveParent = parentLines.map { l =>
-      dvCounts.get(l.split('\t')(0)) match {
-        case Some(n) => withDvField(l, dvDirName, n)
-        case None => l
-      }
-    }
+    val effectiveParent = parentLines.map(e => dvCounts.get(e.path)
+      .fold(e)(n => e.copy(dv = Some(ManifestEntry.Dv(dvDirName, n)))))
     // The version's MERGED SCHEMA rides the manifest as a `#schema:`
     // header (with a `#ts:` commit stamp) so readers resolve both
     // from ONE header read — never a footer sweep over the file list.
@@ -462,17 +449,17 @@ object ScaleOps extends QueryModule {
     // parent pays a single migration footer sweep here, at COMMIT
     // time (already a data-writing operation), after which the chain
     // is header-resolved forever.
-    val schema: StructType = expectParent.filter(_ >= 1L) match {
-      case Some(p) =>
-        val parentSchema = snapshotSchema(s, root, p).orElse {
-          val pf = manifestFiles(s, root, p)
-          if (pf.isEmpty) None
-          else Some(s.read.option("mergeSchema", "true").parquet(pf: _*).schema)
-        }
-        parentSchema.fold(allNullable(df.schema))(
-          mergeSchemas(_, allNullable(df.schema)))
-      case None => allNullable(df.schema)
+    val parent = expectParent.filter(_ >= 1L)
+    val parentHeaders = parent.map(Manifest.readHeaders(s, root, _))
+    val parentSchema = parent.flatMap { p =>
+      parentHeaders.flatMap(_.schema).orElse {
+        val pf = manifestFiles(s, root, p)
+        if (pf.isEmpty) None
+        else Some(s.read.option("mergeSchema", "true").parquet(pf: _*).schema)
+      }
     }
+    val schema = parentSchema.fold(allNullable(df.schema))(
+      mergeSchemas(_, allNullable(df.schema)))
     // The store's declared stats columns ride the manifest as a
     // `#statscols:` header (union of this commit's and the parent's
     // — one parent header read, shared with the schema resolution
@@ -481,30 +468,20 @@ object ScaleOps extends QueryModule {
     // writers indexed. Best-effort metadata: files without stats
     // entries are kept regardless, and an explicit statsCol option
     // still overrides.
-    val statsHeader: Seq[String] = {
-      val parentCols = expectParent.filter(_ >= 1L)
-        .flatMap(p => snapshotStatsCols(s, root, p))
-        .toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
-      val all = (parentCols ++ statsColumns).distinct
-      if (all.isEmpty) Nil else Seq(STATSCOLS_HEADER + all.mkString(","))
-    }
+    val allStatsCols =
+      (parentHeaders.flatMap(_.statsCols).getOrElse(Nil) ++ statsColumns).distinct
     // `#dvs:` header — the O(1) "this version carries deletion
     // vectors" probe every read path checks before choosing the
     // plain scan plan. Full-listing commits answer from their own
     // lines; a delta append inherits the parent's flag (its carried
     // lines may hold dv fields this manifest never sees).
-    val dvsHeader: Seq[String] =
-      if ((effectiveParent ++ newLines).exists(l => dvOf(l).isDefined) ||
-        parentRef.exists(p => snapshotHasDvs(s, root, p)))
-        Seq("#dvs:1")
-      else Nil
-    val text = (tag.toSeq.map(TAG_HEADER + _) ++
-      parentRef.toSeq.map(PARENT_HEADER + _) ++
-      Seq(SCHEMA_HEADER + schema.json,
-        TS_HEADER + System.currentTimeMillis()) ++
-      statsHeader ++ dvsHeader ++
+    val dvs = (effectiveParent ++ newLines).exists(_.dv.isDefined) ||
+      parentRef.exists(p => snapshotHasDvs(s, root, p))
+    val text = Manifest.renderText(
+      Manifest.Headers(tag, parentRef, Some(schema.json),
+        Some(System.currentTimeMillis()),
+        Some(allStatsCols).filter(_.nonEmpty), dvs),
       effectiveParent ++ newLines)
-      .mkString("\n")
     val tmp = new Path(rootP, s"_manifests/.tmp-v$next-$att")
     val out = fs.create(tmp, true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
@@ -616,8 +593,8 @@ object ScaleOps extends QueryModule {
 
   /** The data half of [[commitVersion]]: write `df` under `tmpData`,
     * rename it to the attempt's `dataDir`, and return one manifest
-    * line per new part file with its size and, per stats column, its
-    * zone-map bounds (and Bloom field when `statsBloom`).
+    * entry per new part file with its size and, per stats column, its
+    * zone-map bounds (and Bloom when `statsBloom`).
     *
     * `writeData = false` callers skip this: a METADATA-ONLY commit
     * (the pure MoR delete: new lines are re-pointed parent lines, no
@@ -626,7 +603,8 @@ object ScaleOps extends QueryModule {
     * no-op — it would add one stray empty file per point delete. */
   private def writeDataFiles(s: SparkSession, df: DataFrame,
       tmpData: org.apache.hadoop.fs.Path, dataDir: org.apache.hadoop.fs.Path,
-      next: Long, statsColumns: Seq[String], statsBloom: Boolean): Seq[String] = {
+      next: Long, statsColumns: Seq[String],
+      statsBloom: Boolean): Seq[ManifestEntry] = {
     import org.apache.hadoop.fs.Path
     val fs = fsOf(s, dataDir)
     commitTaskHook("data")
@@ -703,26 +681,14 @@ object ScaleOps extends QueryModule {
       }
     newFiles.map { f =>
       val name = new Path(f).getName
-      val per = bounds.getOrElse(name, Seq.empty)
       val bl = blooms.getOrElse(name, Map.empty)
-      val sz = s"sz:${sizeOf(name)}"
-      if (statsColumns.size <= 1) {
-        // the legacy positional single-column form — existing stores,
-        // oracles and specs read it unchanged
-        (per.headOption, per.headOption.flatMap(p => bl.get(p._1))) match {
-          case (Some((_, lo, hi)), Some(bm)) => s"$f\t$lo\t$hi\t$bm\t$sz"
-          case (Some((_, lo, hi)), None) => s"$f\t$lo\t$hi\t$sz"
-          case _ => s"$f\t$sz"
-        }
-      } else {
-        val fields = per.map { case (c, lo, hi) =>
-          bl.get(c) match {
-            case Some(bm) => s"$c=$lo:$hi:$bm"
-            case None => s"$c=$lo:$hi"
-          }
-        }
-        ((f +: fields) :+ sz).mkString("\t")
+      // one declared column keeps the legacy POSITIONAL form (name "")
+      // that existing stores, oracles and specs read unchanged
+      val stats = bounds.getOrElse(name, Seq.empty).map { case (c, lo, hi) =>
+        (if (statsColumns.size <= 1) "" else c) ->
+          ManifestEntry.ColStats(lo, hi, bl.get(c))
       }
+      ManifestEntry(f, stats, Some(sizeOf(name)))
     }
   }
 
@@ -756,6 +722,8 @@ object ScaleOps extends QueryModule {
     * runs it — a spec throws from here to fail exactly one of them. */
   @volatile private[graft] var commitTaskHook: String => Unit = _ => ()
 
+  private val COMMIT_RETRIES = 3
+
   /** BOUNDED RE-PLAN-AND-RETRY for commits that lose the optimistic
     * race: `body` plans against the CURRENT head and commits with
     * expectParent; a loser re-runs it (re-reading the new head,
@@ -776,11 +744,10 @@ object ScaleOps extends QueryModule {
     *    premises changed under it — and the loser still refuses
     *    loudly, the Delta ConcurrentModificationException stance.
     *
-    * The retry cap and the jittered backoff bound claim-slot
-    * livelock between symmetric retriers. */
+    * The retry cap ([[COMMIT_RETRIES]]) and the jittered backoff
+    * bound claim-slot livelock between symmetric retriers. */
   private[graft] def retryingCommit[T](s: SparkSession, root: String,
       dmlGuard: Boolean)(body: => T): T = {
-    val max = s.conf.get("spark.graft.snapshot.commitRetries", "3").toInt
     var attempt = 0
     while (true) {
       val before = snapshotVersions(s, root).lastOption.getOrElse(0L)
@@ -789,7 +756,7 @@ object ScaleOps extends QueryModule {
         case e: IllegalStateException if e.getMessage != null &&
             e.getMessage.contains("lost the commit race") =>
           attempt += 1
-          if (attempt > max) throw e
+          if (attempt > COMMIT_RETRIES) throw e
           if (dmlGuard) {
             val now = snapshotVersions(s, root)
             val intervening = now.filter(_ > before)
@@ -824,9 +791,8 @@ object ScaleOps extends QueryModule {
       dst: org.apache.hadoop.fs.Path, att: String,
       wroteFiles: Boolean, text: String): Boolean =
     fsOf(s, dst).exists(dst) && scala.util.Try {
-      if (wroteFiles)
-        readManifestLines(s, dst).exists(_.contains(s"-$att"))
-      else readManifestLines(s, dst) == text.split('\n').toSeq
+      if (wroteFiles) Manifest.readLines(s, dst).exists(_.contains(s"-$att"))
+      else Manifest.readLines(s, dst) == text.split('\n').toSeq
     }.getOrElse(false)
 
   /** Per-store commit-point locks (same-JVM exactly-one-winner; see
@@ -931,33 +897,6 @@ object ScaleOps extends QueryModule {
     * retention idea at a publish-window scale). */
   private val RELEASE_SWEEP_GRACE_MS = 15L * 60 * 1000
 
-  private val PARENT_HEADER = "#parent:"
-  private val SCHEMA_HEADER = "#schema:"
-  private val TS_HEADER = "#ts:"
-  private val STATSCOLS_HEADER = "#statscols:"
-
-  /** A committed version's manifest HEADER lines as key -> value
-    * (`#tag:`, `#parent:`, `#schema:`, `#ts:`), reading only the
-    * leading `#` lines — O(headers), never the file list. Planning
-    * against a 10⁵-file version must stay metadata-bounded: one open,
-    * a handful of line reads. */
-  private def manifestHeaders(s: SparkSession, root: String,
-      v: Long): Map[String, String] = {
-    val man = new org.apache.hadoop.fs.Path(root, s"_manifests/v$v.manifest")
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fsOf(s, man).open(man), "UTF-8"))
-    try {
-      val b = Map.newBuilder[String, String]
-      var line = in.readLine()
-      while (line != null && line.startsWith("#")) {
-        val cut = line.indexOf(':')
-        if (cut > 1) b += (line.substring(1, cut) -> line.substring(cut + 1))
-        line = in.readLine()
-      }
-      b.result()
-    } finally in.close()
-  }
-
   /** The MERGED SCHEMA of a committed version, from its manifest's
     * `#schema:` header — written at commit time (evolving on
     * append/merge/evolve commits), so resolving a table's schema is
@@ -969,8 +908,7 @@ object ScaleOps extends QueryModule {
     * back to the footer sweep, once. */
   private[graft] def snapshotSchema(s: SparkSession, root: String,
       v: Long): Option[StructType] =
-    manifestHeaders(s, root, v).get("schema")
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+    Manifest.readHeaders(s, root, v).schema
 
   /** The stats columns a version's history declared, from its
     * `#statscols:` header (written at commit, union-inherited through
@@ -979,7 +917,7 @@ object ScaleOps extends QueryModule {
     * manifests. */
   private[graft] def snapshotStatsCols(s: SparkSession, root: String,
       v: Long): Option[String] =
-    manifestHeaders(s, root, v).get("statscols").filter(_.nonEmpty)
+    Manifest.readHeaders(s, root, v).statsCols.map(_.mkString(","))
 
   /** A committed version's commit instant from its `#ts:` header
     * (written at commit), falling back to the manifest's mtime for
@@ -987,8 +925,8 @@ object ScaleOps extends QueryModule {
     * backup/restore/rsync of the store — mtimes don't. */
   private[graft] def snapshotCommitTs(s: SparkSession, root: String,
       v: Long): Long =
-    manifestHeaders(s, root, v).get("ts").map(_.toLong).getOrElse {
-      val man = new org.apache.hadoop.fs.Path(root, s"_manifests/v$v.manifest")
+    Manifest.readHeaders(s, root, v).ts.getOrElse {
+      val man = Manifest.path(root, v)
       fsOf(s, man).getFileStatus(man).getModificationTime
     }
 
@@ -1050,45 +988,9 @@ object ScaleOps extends QueryModule {
           s"${a.simpleString} vs ${b.simpleString}")
     }
 
-  private def readManifestLines(s: SparkSession,
-      p: org.apache.hadoop.fs.Path): Seq[String] = {
-    val in = fsOf(s, p).open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-  }
-
-  /** A committed version's manifest data lines (headers stripped),
-    * each `path`, `path\tmin\tmax`, or `path\tmin\tmax\tbloom` — the
-    * carry-forward unit for rewrite commits.
-    *
-    * A DELTA manifest (`#parent:<v>` header, written by the
-    * streaming-append hot path) carries only its own batch's lines;
-    * resolution walks the parent chain, parent lines first — the
-    * Delta-log/Iceberg-manifest-list shape. The chain is bounded by
-    * [[CHECKPOINT_EVERY]] (every C-th append, and every rewrite op,
-    * commits a full listing), so a read opens ≤ C small files. A
-    * retained version whose chain crosses a vacuumed-away parent
-    * reads from the `v<N>.full` listing vacuum materialized before
-    * deleting the parent (pure cache: rename-committed, content ==
-    * the resolved chain). */
-  private[graft] def manifestDataLines(s: SparkSession, root: String,
-      v: Long): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val fullP = new Path(root, s"_manifests/v$v.full")
-    if (fsOf(s, fullP).exists(fullP))
-      return readManifestLines(s, fullP).filterNot(_.startsWith("#"))
-    val lines = readManifestLines(s, new Path(root, s"_manifests/v$v.manifest"))
-    val own = lines.filterNot(_.startsWith("#"))
-    lines.find(_.startsWith(PARENT_HEADER))
-      .map(_.stripPrefix(PARENT_HEADER).toLong) match {
-      case Some(p) => manifestDataLines(s, root, p) ++ own
-      case None => own
-    }
-  }
-
   /** A committed version's file list. */
   private[graft] def manifestFiles(s: SparkSession, root: String, v: Long): Seq[String] =
-    manifestDataLines(s, root, v).map(_.split('\t')(0))
+    Manifest.read(s, root, v).files
 
   /** Is hop parent→v a PURE APPEND (child's manifest carries every
     * parent LINE verbatim, plus new ones)? — the incremental-consumer
@@ -1101,11 +1003,7 @@ object ScaleOps extends QueryModule {
     * demotes a real append. */
   private[graft] def isPureAppendHop(s: SparkSession, root: String,
       parent: Long, v: Long): Boolean =
-    manifestDataLines(s, root, parent).toSet
-      .subsetOf(manifestDataLines(s, root, v).toSet)
-
-  /** One column's per-file stats as a manifest line carries them. */
-  private case class FileColStats(lo: Long, hi: Long, bloom: Option[String])
+    Manifest.read(s, root, v).appendsTo(Manifest.read(s, root, parent))
 
   // ---------------------------------------------------------------
   // Stat space — ONE Long-typed manifest format indexes integral,
@@ -1197,96 +1095,27 @@ object ScaleOps extends QueryModule {
     case _ => None
   }
 
-  /** Parse a manifest data line's stats fields. Two formats coexist:
-    * the legacy single-column positional form (`path\tlo\thi[\tbloom]`
-    * — the column's NAME is the caller's declaration, recorded here
-    * under the reserved key "") and the multi-column named form
-    * (`path\tcol=lo:hi[:bloom]\t…`) written when a commit declares
-    * more than one stats column. Readers resolve a named entry first
-    * and fall back to the positional one ([[statsFor]]), so the two
-    * forms mix freely across a store's history. */
-  private def parseStatsLine(
-      line: String): (String, Map[String, FileColStats]) = {
-    val arr = line.split('\t')
-    val path = arr(0)
-    // the `sz:<bytes>` field (committed since the byte-budget pacing
-    // landed) and the `dv:<dir>:<n>` deletion-vector field are
-    // metadata about the FILE, not a column — invisible to stats
-    // resolution, read by [[manifestFileSizes]] / [[manifestDvs]]
-    val fields = arr.drop(1).filterNot(f => isSizeField(f) || isDvField(f))
-    if (fields.length >= 2 && !fields(0).contains('=')) {
-      val bloom = if (fields.length >= 3) Some(fields(2)) else None
-      (path, Map("" -> FileColStats(fields(0).toLong, fields(1).toLong, bloom)))
-    } else {
-      val named = fields.iterator.filter(_.contains('=')).map { fld =>
-        val cut = fld.indexOf('=')
-        val c = fld.substring(0, cut)
-        val parts = fld.substring(cut + 1).split(':')
-        c -> FileColStats(parts(0).toLong, parts(1).toLong,
-          if (parts.length >= 3) Some(parts(2)) else None)
-      }.toMap
-      (path, named)
-    }
-  }
-
-  /** `sz:<bytes>` — the per-file size field a commit stamps on every
-    * new data line (one FileStatus the writer already holds), so
-    * byte-budget admission ([[graft.streaming.SnapshotStream]]'s
-    * maxBytesPerTrigger) plans micro-batches from the MANIFEST
-    * instead of a per-file RPC storm at trigger time. */
-  private def isSizeField(f: String): Boolean =
-    f.length > 3 && f.startsWith("sz:") && f.drop(3).forall(_.isDigit)
-
-  /** A committed version's per-file byte sizes, for every manifest
-    * line that carries one. Size-less lines (commits predating the
-    * field) are simply absent — byte-budget consumers fall back to
-    * file-count admission for them, never to an RPC. */
+  /** A committed version's per-file byte sizes (`sz:` fields) — an
+    * inspection helper over [[Manifest.Listing.sizes]]. */
   private[graft] def manifestFileSizes(s: SparkSession, root: String,
       v: Long): Map[String, Long] =
-    manifestDataLines(s, root, v).flatMap { line =>
-      val arr = line.split('\t')
-      arr.drop(1).find(isSizeField).map(f => arr(0) -> f.drop(3).toLong)
-    }.toMap
+    Manifest.read(s, root, v).sizes
 
   // ---------------------------------------------------------------
   // Deletion vectors — merge-on-read row-level deletes
   // ---------------------------------------------------------------
 
-  /** `dv:<dir>:<count>` — the per-file DELETION-VECTOR field (the
-    * Delta/Iceberg merge-on-read shape): `dir` is a root-relative
-    * directory of (f, pos) parquet rows naming the file's DELETED
-    * row positions (parquet `_metadata.row_index` space — `f` is the
-    * file path exactly as `_metadata.file_path` and the manifest both
-    * render it), `count` the file's deleted-row count. A line's DV
-    * set is CUMULATIVE: a second delete on the same file writes the
-    * union into the new commit's dir and re-points the line, so one
-    * dir reference per line always suffices, and DV'd positions are
-    * MONOTONE per physical file (rows never un-delete; rewrites make
-    * NEW files). Reads anti-join the dir's rows out; writes that
-    * rewrite a file drop its field (the rewrite materialized the
-    * deletes). Readers that predate the field would resurrect
-    * deleted rows silently — which is why a version carrying any DV
-    * also carries the `#dvs:` header and every read path checks it. */
-  private def isDvField(f: String): Boolean = f.startsWith("dv:")
-
-  /** Does this manifest line carry a deletion-vector field? */
-  private[graft] def lineHasDv(l: String): Boolean = dvOf(l).isDefined
-
-  /** Parse a line's DV field → (root-relative dir, deleted count). */
-  private def dvOf(line: String): Option[(String, Long)] =
-    line.split('\t').drop(1).find(isDvField).map { f =>
-      val body = f.drop(3)
-      val cut = body.lastIndexOf(':')
-      (body.substring(0, cut), body.substring(cut + 1).toLong)
-    }
-
-  /** file path → (dv dir, deleted count) for every line carrying a
-    * deletion vector at version `v`. */
+  /** Deletion vectors (the manifest's `dv:` fields, the Delta/Iceberg
+    * merge-on-read shape): reads anti-join each file's deleted
+    * positions out, writes that rewrite a file drop its field (the
+    * rewrite materialized the deletes), and a version carrying any
+    * vector also carries the `#dvs:` header every read path checks.
+    *
+    * file path → (dv dir, deleted count) at version `v` — an
+    * inspection helper over [[Manifest.Listing.dvs]]. */
   private[graft] def manifestDvs(s: SparkSession, root: String,
       v: Long): Map[String, (String, Long)] =
-    manifestDataLines(s, root, v).flatMap { line =>
-      dvOf(line).map(line.split('\t')(0) -> _)
-    }.toMap
+    Manifest.read(s, root, v).dvs.map { case (f, d) => f -> (d.dir, d.count) }
 
   /** Does version `v` carry ANY deletion vector? — one manifest
     * header read (`#dvs:`, stamped at commit), never a line scan.
@@ -1307,12 +1136,7 @@ object ScaleOps extends QueryModule {
   private[graft] def snapshotHasDvs(s: SparkSession, root: String,
       v: Long): Boolean =
     dvHeaderCache.computeIfAbsent((qualifiedRoot(s, root), v),
-      _ => manifestHeaders(s, root, v).contains("dvs"))
-
-  /** A line with its DV field replaced (or added). */
-  private def withDvField(line: String, dir: String, count: Long): String =
-    (line.split('\t').filterNot(isDvField) :+ s"dv:$dir:$count")
-      .mkString("\t")
+      _ => Manifest.readHeaders(s, root, v).dvs)
 
   /** The CURRENT deleted (f, pos) rows of the given manifest lines —
     * each referenced dv dir read RESTRICTED TO THE FILES WHOSE LINE
@@ -1326,8 +1150,8 @@ object ScaleOps extends QueryModule {
     * next commit's dir and overcount its manifest `dv:` field.
     * Empty-schema frame when no line carries a vector. */
   private[graft] def dvRowsOf(s: SparkSession, root: String,
-      lines: Seq[String]): DataFrame = {
-    val withDv = lines.flatMap(l => dvOf(l).map(l.split('\t')(0) -> _._1))
+      lines: Seq[ManifestEntry]): DataFrame = {
+    val withDv = lines.flatMap(e => e.dv.map(e.path -> _.dir))
     if (withDv.isEmpty)
       s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         StructType(Seq(StructField("f", StringType),
@@ -1347,10 +1171,9 @@ object ScaleOps extends QueryModule {
     * would wave through. The manifest already knows each line's
     * per-file deleted count; Σ count × (path + 24) ≤ 32 MB
     * broadcasts, anything bigger shuffles. */
-  private[graft] def dvSideBroadcastable(lines: Seq[String]): Boolean =
-    lines.flatMap { l =>
-      dvOf(l).map { case (_, n) => n * (l.split('\t')(0).length + 24L) }
-    }.sum <= (32L << 20)
+  private[graft] def dvSideBroadcastable(lines: Seq[ManifestEntry]): Boolean =
+    lines.flatMap(e => e.dv.map(_.count * (e.path.length + 24L)))
+      .sum <= (32L << 20)
 
   /** DV-AWARE READ of a set of manifest lines — THE read doorway
     * every path that opens snapshot data files goes through once a
@@ -1364,7 +1187,7 @@ object ScaleOps extends QueryModule {
     * columns; without it `merged` selects plain vs mergeSchema
     * footer resolution, preserving each caller's historic contract. */
   private[graft] def readLinesDv(s: SparkSession, root: String,
-      lines: Seq[String], schema: Option[StructType],
+      lines: Seq[ManifestEntry], schema: Option[StructType],
       merged: Boolean): DataFrame = {
     def rd(files: Seq[String]): DataFrame = schema match {
       case Some(sc) => s.read.schema(sc).parquet(files: _*)
@@ -1372,21 +1195,19 @@ object ScaleOps extends QueryModule {
         s.read.option("mergeSchema", "true").parquet(files: _*)
       case None => readParquetPlain(s, files)
     }
-    val dvd = lines.filter(dvOf(_).isDefined)
-    if (dvd.isEmpty) rd(lines.map(_.split('\t')(0)))
+    val (dvd, clean) = lines.partition(_.dv.isDefined)
+    if (dvd.isEmpty) rd(clean.map(_.path))
     else {
-      val dvdPaths = dvd.map(_.split('\t')(0))
-      val clean = lines.map(_.split('\t')(0)).filterNot(dvdPaths.toSet)
       val delDf = dvRowsOf(s, root, dvd)
         .select(col("f").as("__graft_dv_f"), col("pos").as("__graft_dv_p"))
       val del = if (dvSideBroadcastable(dvd)) broadcast(delDf) else delDf
-      val masked = rd(dvdPaths)
+      val masked = rd(dvd.map(_.path))
         .withColumn("__graft_dv_f", col("_metadata.file_path"))
         .withColumn("__graft_dv_p", col("_metadata.row_index"))
         .join(del, Seq("__graft_dv_f", "__graft_dv_p"), "left_anti")
         .drop("__graft_dv_f", "__graft_dv_p")
       if (clean.isEmpty) masked
-      else masked.unionByName(rd(clean), allowMissingColumns = true)
+      else masked.unionByName(rd(clean.map(_.path)), allowMissingColumns = true)
     }
   }
 
@@ -1398,81 +1219,6 @@ object ScaleOps extends QueryModule {
       files: Seq[String]): DataFrame =
     SqlShims.parquetFooterSchema(s, files)
       .fold(s.read)(s.read.schema(_)).parquet(files: _*)
-
-  /** DV-aware read of a FILE SUBSET of version `v` under an explicit
-    * schema — the streaming source's bootstrap slices go through
-    * this (a raw parquet read of a DV'd bootstrap version would
-    * resurrect every deleted row into the stream). */
-  private[graft] def readFilesDv(s: SparkSession, root: String, v: Long,
-      files: Seq[String], schema: StructType): DataFrame = {
-    val fset = files.toSet
-    val lines = manifestDataLines(s, root, v)
-      .filter(l => fset(l.split('\t')(0)))
-    readLinesDv(s, root, lines, Some(schema), merged = true)
-  }
-
-  /** Column `c`'s stats from a parsed line: the named entry, else —
-    * only when `allowPositional` — the positional one. A positional
-    * line does not record WHICH column it indexes, so the fallback is
-    * sound only when the line's column identity is unambiguous:
-    * either the caller itself declared it (`c` = "", the
-    * pre-multi-column API contract) or the store's `#statscols:`
-    * header names exactly one column and it is `c` (see
-    * [[positionalStatsOk]]). In a store mixing positional and named
-    * lines across a MULTI-column history, a positional line could
-    * belong to any single-column commit's column — resolving it for
-    * some other column would prune with the wrong min/max and
-    * silently drop rows, so such lines are treated as stats-absent
-    * (the file is kept; degrade-to-keep, never wrong answers). */
-  private def statsFor(named: Map[String, FileColStats],
-      c: String, allowPositional: Boolean): Option[FileColStats] =
-    named.get(c).orElse(if (allowPositional) named.get("") else None)
-
-  /** Whether column `c` may resolve POSITIONAL stats lines at version
-    * `v`: yes for `c` = "" (the caller-declares-the-column API path);
-    * yes for a store with NO `#statscols:` header (pre-header
-    * manifests carry only positional lines — named stats and the
-    * header shipped in the same release — so the caller's declared
-    * identity is the only identity there is, the original contract);
-    * else only when the header names exactly {`c`} — then every
-    * single-column (positional) commit in the history indexed `c`
-    * and the fallback is provably right. */
-  private def positionalStatsOk(s: SparkSession, root: String,
-      v: Long, c: String): Boolean =
-    c.isEmpty || {
-      snapshotStatsCols(s, root, v) match {
-        case None => true // pre-header store: all lines positional
-        case Some(h) =>
-          val declared =
-            h.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-          declared.size == 1 && declared.head.equalsIgnoreCase(c)
-      }
-    }
-
-  /** A committed version's zone-map bounds FOR COLUMN `c`: file path
-    * -> (min, max) for every manifest line that carries stats for it
-    * (absent entries degrade pruned reads to keeping the file, never
-    * to wrong answers). `c` = "" resolves only positional stats. */
-  private def manifestBounds(s: SparkSession, root: String,
-      v: Long, c: String = ""): Map[String, (Long, Long)] = {
-    val posOk = positionalStatsOk(s, root, v, c)
-    manifestDataLines(s, root, v).flatMap { line =>
-      val (path, named) = parseStatsLine(line)
-      statsFor(named, c, posOk).map(st => path -> (st.lo, st.hi))
-    }.toMap
-  }
-
-  /** Every column any of version `v`'s data lines carries stats for,
-    * named columns only — what a rewrite commit must keep indexing so
-    * its rewritten files don't silently lose a store's second stats
-    * column. (Positional lines don't record their column's name; the
-    * rewriting caller's own key column covers them, as it always
-    * has.) */
-  private def statsColumnsOf(s: SparkSession, root: String,
-      v: Long): Seq[String] =
-    manifestDataLines(s, root, v)
-      .flatMap(l => parseStatsLine(l)._2.keys.filter(_.nonEmpty))
-      .distinct.sorted
 
   // ---------------------------------------------------------------
   // Per-file Bloom fingerprints — point-lookup file skipping
@@ -1503,7 +1249,7 @@ object ScaleOps extends QueryModule {
       }: _*))
 
   /** Set-bit positions → fixed-width hex (64 longs, big-endian per
-    * long), the manifest's 4th tab field. */
+    * long), the manifest line's Bloom field. */
   private def bloomHex(positions: Seq[Long]): String = {
     val words = new Array[Long](BLOOM_BITS / 64)
     positions.foreach { p =>
@@ -1532,19 +1278,6 @@ object ScaleOps extends QueryModule {
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
   }
 
-  /** A committed version's Bloom fingerprints: file -> hex bitmap for
-    * every manifest line carrying a 4th field. Files without one are
-    * always kept by lookup reads (same degrade contract as the
-    * zone-map bounds — skipping needs PROOF of absence). */
-  private def manifestBlooms(s: SparkSession, root: String,
-      v: Long, c: String = ""): Map[String, String] = {
-    val posOk = positionalStatsOk(s, root, v, c)
-    manifestDataLines(s, root, v).flatMap { line =>
-      val (path, named) = parseStatsLine(line)
-      statsFor(named, c, posOk).flatMap(_.bloom).map(path -> _)
-    }.toMap
-  }
-
   /** BLOOM-SKIPPED POINT LOOKUP: plan only the manifest files whose
     * zone-map interval contains ≥1 key AND whose Bloom fingerprint
     * passes ≥1 key, then filter the survivors to the key set. Zone
@@ -1560,43 +1293,29 @@ object ScaleOps extends QueryModule {
     * the sidecar. */
   def readSnapshotKeyLookup(s: SparkSession, root: String,
       version: Option[Long], colName: String, keys: Seq[Long]): DataFrame = {
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"snapshot v$v not committed (have ${vs.mkString(",")})")
-    val bounds = manifestBounds(s, root, v, colName)
-    val blooms = manifestBlooms(s, root, v, colName)
+    val v = resolveVersion(s, root, version)
+    val m = Manifest.read(s, root, v)
+    val bounds = m.bounds(colName)
+    val blooms = m.blooms(colName)
     val posOf = bloomKeyPositions(s, keys.distinct)
-    val lines = manifestDataLines(s, root, v)
-    val kept = lines.filter { l =>
-      val f = l.split('\t')(0)
+    val kept = m.entries.filter { e =>
       keys.exists { k =>
-        bounds.get(f).forall { case (mn, mx) => k >= mn && k <= mx } &&
-          blooms.get(f).forall(bloomTest(_, posOf(k)))
+        bounds.get(e.path).forall { case (mn, mx) => k >= mn && k <= mx } &&
+          blooms.get(e.path).forall(bloomTest(_, posOf(k)))
       }
     }
     // an empty store (a delete can rewrite the last file away) has
     // no footer to borrow a schema from — surface that, don't NPE
-    require(lines.nonEmpty,
+    require(m.entries.nonEmpty,
       s"snapshot v$v lists no data files; key lookup has no schema source")
     val base = if (kept.nonEmpty)
       readLinesDv(s, root, kept, schema = None, merged = false)
       // every file proven key-free: one footer for the schema, 0 rows
-      else readParquetPlain(s, Seq(lines.head.split('\t')(0))).limit(0)
+      else readParquetPlain(s, m.files.take(1)).limit(0)
     base.filter(col(colName).isin(keys.distinct: _*))
   }
 
-  /** File planning for the DataSource V2 table
-    * ([[graft.sources.SnapshotDataSource]]): the resolved version's
-    * files minus everything the zone maps prove outside `[lo, hi]`
-    * and the Bloom fields prove key-free for every member of `keys`
-    * — the one pruning discipline readSnapshotPruned /
-    * readSnapshotKeyLookup apply, composed and exposed so ARBITRARY
-    * Catalyst plans (joins, aggregates, SQL text) prune the same way
-    * through `spark.read.format("graft-snapshot")`. Files without
-    * stats/Bloom fields are kept — pruning only ever skips files
-    * PROVEN irrelevant. Returns (resolved version, kept files). */
-  /** One column's pruning constraints for [[planSnapshotFiles]] —
+  /** One column's pruning constraints for [[pruneFiles]] —
     * conjunctive across columns: a file survives only if EVERY
     * constrained column's stats allow it. `keys` are point values in
     * STAT SPACE (the Long encoding of [[statSpaceDecode]]) and drive
@@ -1610,31 +1329,24 @@ object ScaleOps extends QueryModule {
       hi: Option[Long], keys: Option[Seq[Long]],
       nativeKeys: Option[Seq[Any]] = None)
 
-  private[graft] def planSnapshotFiles(s: SparkSession, root: String,
-      version: Option[Long], lo: Option[Long], hi: Option[Long],
-      keys: Option[Seq[Long]]): (Long, Seq[String]) =
-    planSnapshotFiles(s, root, version,
-      if (lo.isEmpty && hi.isEmpty && keys.isEmpty) Nil
-      // the legacy long-key contract: keys ARE the native type
-      else Seq(ColConstraint("", lo, hi, keys,
-        keys.map(_.map(k => k: Any)))))
-
-  private[graft] def planSnapshotFiles(s: SparkSession, root: String,
-      version: Option[Long],
-      constraints: Seq[ColConstraint]): (Long, Seq[String]) = {
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"snapshot v$v not committed (have ${vs.mkString(",")})")
-    val files = manifestFiles(s, root, v)
+  /** File planning for the DataSource V2 table
+    * ([[graft.sources.SnapshotDataSource]]) and the DML rewrites: the
+    * listing's files minus everything some constraint's zone maps
+    * prove out of range and its Bloom fields prove key-free — the one
+    * pruning discipline readSnapshotPruned / readSnapshotKeyLookup
+    * apply, composed and exposed so ARBITRARY Catalyst plans (joins,
+    * aggregates, SQL text) prune the same way through
+    * `spark.read.format("graft-snapshot")`. Files without stats/Bloom
+    * fields are kept — pruning only ever skips files PROVEN
+    * irrelevant. */
+  private[graft] def pruneFiles(s: SparkSession, m: Manifest.Listing,
+      constraints: Seq[ColConstraint]): Seq[String] = {
     val active = constraints.filter(c =>
       c.lo.isDefined || c.hi.isDefined || c.keys.isDefined)
-    if (active.isEmpty) return (v, files)
-    val kept = active.foldLeft(files) { (remaining, con) =>
-      val bounds = manifestBounds(s, root, v, con.col)
+    active.foldLeft(m.files) { (remaining, con) =>
+      val bounds = m.bounds(con.col)
       val blooms =
-        if (con.nativeKeys.exists(_.nonEmpty))
-          manifestBlooms(s, root, v, con.col)
+        if (con.nativeKeys.exists(_.nonEmpty)) m.blooms(con.col)
         else Map.empty[String, String]
       val posOf = con.nativeKeys.map(nk => bloomKeyPositionsTyped(s, nk.distinct))
         .getOrElse(Map.empty)
@@ -1659,7 +1371,16 @@ object ScaleOps extends QueryModule {
         inRange && hasKey
       }
     }
-    (v, kept)
+  }
+
+  /** `version`, or the latest, checked to be committed. */
+  private def resolveVersion(s: SparkSession, root: String,
+      version: Option[Long]): Long = {
+    val vs = snapshotVersions(s, root)
+    require(vs.nonEmpty, s"no committed snapshots under $root")
+    val v = version.getOrElse(vs.last)
+    require(vs.contains(v), s"snapshot v$v not committed (have ${vs.mkString(",")})")
+    v
   }
 
   /** Probe positions for NATIVELY TYPED lookup keys (long or string
@@ -1783,22 +1504,21 @@ object ScaleOps extends QueryModule {
     val pinned = refTargets(s, root).values.toSet
     val retainedVs = vs.filter(v => pinned(v) || vs.takeRight(keep).contains(v))
     val expired = vs.filterNot(retainedVs.contains)
-    val referenced = retainedVs
-      .flatMap(v => manifestFiles(s, root, v)).toSet
-    val reclaim = expired.flatMap(v => manifestFiles(s, root, v))
+    val listing = vs.map(v => v -> Manifest.read(s, root, v)).toMap
+    val referenced = retainedVs.flatMap(listing(_).files).toSet
+    val reclaim = expired.flatMap(listing(_).files)
       .distinct.filterNot(referenced)
     // a retained DELTA manifest may chain through an expired parent:
     // materialize its resolved `v<N>.full` listing FIRST (pure cache,
     // rename-committed, idempotent — a crash here just re-runs), so
     // deleting expired manifests can never orphan a retained read
     if (expired.nonEmpty) retainedVs.foreach { v =>
-      val fullP = new Path(root, s"_manifests/v$v.full")
-      val manP = new Path(root, s"_manifests/v$v.manifest")
-      val isDelta = readManifestLines(s, manP).exists(_.startsWith(PARENT_HEADER))
-      if (isDelta && !fs.exists(fullP)) {
+      val fullP = Manifest.fullPath(root, v)
+      if (listing(v).headers.parent.isDefined && !fs.exists(fullP)) {
         val tmp = new Path(root, s"_manifests/.tmp-v$v.full")
         val out = fs.create(tmp, true)
-        try out.write(manifestDataLines(s, root, v).mkString("\n").getBytes("UTF-8"))
+        try out.write(Manifest.renderText(Manifest.Headers(), listing(v).entries)
+          .getBytes("UTF-8"))
         finally out.close()
         if (!fs.rename(tmp, fullP)) fs.delete(tmp, false)
       }
@@ -1816,8 +1536,7 @@ object ScaleOps extends QueryModule {
     // bytes count into the reclaim total (the write-side cost of
     // merge-on-read is bounded BY THIS sweep plus compaction's
     // materialization, and both are auditable).
-    val referencedDv = retainedVs
-      .flatMap(v => manifestDvs(s, root, v).values.map(_._1)).toSet
+    val referencedDv = retainedVs.flatMap(listing(_).dvs.values.map(_.dir)).toSet
     val dvDirRe = "dv-v(\\d+)(-.*)?".r
     vs.lastOption.foreach { last =>
       fs.listStatus(new Path(root)).filter(_.isDirectory).foreach { d =>
@@ -1843,8 +1562,8 @@ object ScaleOps extends QueryModule {
         }
         fs.delete(relP, false)
       }
-      fs.delete(new Path(root, s"_manifests/v$v.manifest"), false)
-      fs.delete(new Path(root, s"_manifests/v$v.full"), false)
+      fs.delete(Manifest.path(root, v), false)
+      fs.delete(Manifest.fullPath(root, v), false)
       fs.delete(new Path(root, s"_manifests/v$v.stats"), false) // legacy sidecars
       fs.delete(new Path(root, s"_manifests/v$v.tag"), false)
       fs.delete(new Path(root, s"_manifests/.claim-v$v"), false)
@@ -1953,14 +1672,11 @@ object ScaleOps extends QueryModule {
     * what it reads. */
   def readSnapshot(s: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"snapshot v$v not committed (have ${vs.mkString(",")})")
+    val v = resolveVersion(s, root, version)
+    val m = Manifest.read(s, root, v)
     if (!snapshotHasDvs(s, root, v)) // one header probe; keeps the
-      readParquetPlain(s, manifestFiles(s, root, v)) // plain scan plan
-    else readLinesDv(s, root, manifestDataLines(s, root, v),
-      schema = None, merged = false)
+      readParquetPlain(s, m.files) // plain scan plan
+    else readLinesDv(s, root, m.entries, schema = None, merged = false)
   }
 
   /** ZONE-MAP-PRUNED snapshot read: plan only the manifest files
@@ -1975,19 +1691,13 @@ object ScaleOps extends QueryModule {
     * predicate; correctness never depends on the sidecar. */
   def readSnapshotPruned(s: SparkSession, root: String, version: Option[Long],
       colName: String, lo: Long, hi: Long): DataFrame = {
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"snapshot v$v not committed (have ${vs.mkString(",")})")
-    val stats = manifestBounds(s, root, v, colName)
-    val lines = manifestDataLines(s, root, v)
-    val kept = lines.filter { l =>
-      val f = l.split('\t')(0)
-      stats.get(f).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
+    val m = Manifest.read(s, root, resolveVersion(s, root, version))
+    val stats = m.bounds(colName)
+    val kept = m.entries.filter(e =>
+      stats.get(e.path).forall { case (mn, mx) => mx >= lo && mn <= hi })
     val base = if (kept.nonEmpty)
       readLinesDv(s, root, kept, schema = None, merged = false)
-    else s.read.parquet(lines.map(_.split('\t')(0)): _*)
+    else s.read.parquet(m.files: _*)
       // schema-only; predicate yields 0 rows (no DV masking needed)
     base.filter(col(colName) >= lo && col(colName) <= hi)
   }
@@ -2255,10 +1965,8 @@ object ScaleOps extends QueryModule {
   /** Files ADDED between two committed versions — a pure manifest
     * set-difference, no data read and no listing. */
   private[graft] def snapshotAddedFiles(s: SparkSession, root: String,
-      vFrom: Long, vTo: Long): Seq[String] = {
-    val before = manifestFiles(s, root, vFrom).toSet
-    manifestFiles(s, root, vTo).filterNot(before)
-  }
+      vFrom: Long, vTo: Long): Seq[String] =
+    Manifest.read(s, root, vTo).addedOver(Manifest.read(s, root, vFrom)).map(_.path)
 
   /** INCREMENTAL (change-data-feed-shaped) read: the rows version
     * `vTo` ADDED over `vFrom`, resolved at FILE grain from the two
@@ -2385,12 +2093,12 @@ object ScaleOps extends QueryModule {
     * other files carry, and a rewrite through it would silently drop
     * those values (reads null-fill afterwards). Pre-header stores pay
     * the one mergeSchema footer sweep over the touched files only. */
-  private def readTouched(s: SparkSession, root: String, v: Long,
-      lines: Seq[String]): DataFrame =
+  private def readTouched(s: SparkSession, root: String, m: Manifest.Listing,
+      lines: Seq[ManifestEntry]): DataFrame =
     // DV-aware: a rewrite that read a DV'd file raw would resurrect
     // its deleted rows INTO the rewrite — the one way a committed
     // delete could silently un-happen
-    readLinesDv(s, root, lines, snapshotSchema(s, root, v), merged = true)
+    readLinesDv(s, root, lines, m.headers.schema, merged = true)
 
   /** COPY-ON-WRITE row-level DELETE: commit a new version whose
     * content is the latest version's minus rows with `colName` in
@@ -2425,16 +2133,15 @@ object ScaleOps extends QueryModule {
     val vs = snapshotVersions(s, root)
     require(vs.nonEmpty, s"no committed snapshots under $root")
     val v = vs.last
-    val bounds = manifestBounds(s, root, v, colName)
-    val (touched, untouched) = manifestDataLines(s, root, v).partition { line =>
-      val f = line.split('\t')(0)
-      bounds.get(f).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
+    val m = Manifest.read(s, root, v)
+    val bounds = m.bounds(colName)
+    val (touched, untouched) = m.entries.partition(e =>
+      bounds.get(e.path).forall { case (mn, mx) => mx >= lo && mn <= hi })
     if (touched.isEmpty) return v
-    val keepStats = (statsColumnsOf(s, root, v) :+ colName).distinct
+    val keepStats = (m.statsColumns :+ colName).distinct
     // NULLs are outside every range: keep them (a bare NOT BETWEEN
     // would silently delete null-keyed rows through three-valued logic)
-    val base = readTouched(s, root, v, touched)
+    val base = readTouched(s, root, m, touched)
     val kept = base.filter(col(colName).isNull ||
       !(col(colName) >= lo && col(colName) <= hi))
     val dropped = base.filter(col(colName) >= lo && col(colName) <= hi)
@@ -2449,7 +2156,7 @@ object ScaleOps extends QueryModule {
     * [[deleteFromSnapshot]]: `constraints` — the pushed filters
     * mapped into stat space by the connector, exactly what a pruned
     * READ would derive — pick the candidate files through
-    * [[planSnapshotFiles]]; every provably predicate-free file's
+    * [[pruneFiles]]; every provably predicate-free file's
     * manifest line (stats, Blooms and all) carries forward verbatim,
     * its data never read. `pred` evaluates with SQL three-valued
     * logic: only rows where it is TRUE are deleted (NULL keeps — the
@@ -2486,10 +2193,10 @@ object ScaleOps extends QueryModule {
     * anti-joined out) with `__graft_dv_f`/`__graft_dv_p` position
     * columns attached — the MoR write paths' shared read: new DV
     * positions come from these columns, preimages from the rows. */
-  private def readTouchedWithPos(s: SparkSession, root: String, v: Long,
-      lines: Seq[String]): DataFrame = {
-    val files = lines.map(_.split('\t')(0))
-    val raw = (snapshotSchema(s, root, v) match {
+  private def readTouchedWithPos(s: SparkSession, root: String,
+      m: Manifest.Listing, lines: Seq[ManifestEntry]): DataFrame = {
+    val files = lines.map(_.path)
+    val raw = (m.headers.schema match {
       case Some(sc) => s.read.schema(sc)
       case None => s.read.option("mergeSchema", "true")
     }).parquet(files: _*)
@@ -2515,15 +2222,12 @@ object ScaleOps extends QueryModule {
     val vs = snapshotVersions(s, root)
     require(vs.nonEmpty, s"no committed snapshots under $root")
     val v = vs.last
-    val (_, candidates) = planSnapshotFiles(s, root, Some(v), constraints)
-    val cand = candidates.toSet
-    val lines = manifestDataLines(s, root, v)
-    val (touched, untouched) = lines
-      .partition(l => cand.contains(l.split('\t')(0)))
+    val m = Manifest.read(s, root, v)
+    val cand = pruneFiles(s, m, constraints).toSet
+    val lines = m.entries
+    val (touched, untouched) = lines.partition(e => cand(e.path))
     if (touched.isEmpty) return v
-    val keepStats = (statsColumnsOf(s, root, v) ++
-      snapshotStatsCols(s, root, v).toSeq
-        .flatMap(_.split(',')).map(_.trim)).filter(_.nonEmpty).distinct
+    val keepStats = (m.statsColumns ++ m.headers.statsCols.getOrElse(Nil)).distinct
     val hit = coalesce(pred, lit(false))
     if (morChosen(s, mode, touched.size, lines.size)) {
       // MERGE-ON-READ: the deleted rows' (file, position) pairs land
@@ -2531,7 +2235,7 @@ object ScaleOps extends QueryModule {
       // a point delete costs one tiny parquet dir plus a manifest,
       // whatever the store size. Reads anti-join the positions out;
       // compaction materializes them away on its own cadence.
-      val live = readTouchedWithPos(s, root, v, touched)
+      val live = readTouchedWithPos(s, root, m, touched)
       val hits = live.filter(hit)
       if (hits.limit(1).count() == 0L) return v // nothing matched: no-op
       val dropped = hits.drop("__graft_dv_f", "__graft_dv_p")
@@ -2549,7 +2253,7 @@ object ScaleOps extends QueryModule {
     // s.read.parquet would silently drop those values from the
     // rewrite (mergeIntoSnapshot's mergeSchema rationale, applied to
     // every DML rewrite read)
-    val base = readTouched(s, root, v, touched)
+    val base = readTouched(s, root, m, touched)
     val kept = base.filter(!hit)
     val dropped = base.filter(hit)
     commitVersion(s, root, kept, parentLines = untouched,
@@ -2580,22 +2284,19 @@ object ScaleOps extends QueryModule {
     val vs = snapshotVersions(s, root)
     require(vs.nonEmpty, s"no committed snapshots under $root")
     val v = vs.last
-    val (_, candidates) = planSnapshotFiles(s, root, Some(v), constraints)
-    val cand = candidates.toSet
-    val lines = manifestDataLines(s, root, v)
-    val (touched, untouched) = lines
-      .partition(l => cand.contains(l.split('\t')(0)))
+    val m = Manifest.read(s, root, v)
+    val cand = pruneFiles(s, m, constraints).toSet
+    val lines = m.entries
+    val (touched, untouched) = lines.partition(e => cand(e.path))
     if (touched.isEmpty) return v
-    val keepStats = (statsColumnsOf(s, root, v) ++
-      snapshotStatsCols(s, root, v).toSeq
-        .flatMap(_.split(',')).map(_.trim)).filter(_.nonEmpty).distinct
+    val keepStats = (m.statsColumns ++ m.headers.statsCols.getOrElse(Nil)).distinct
     if (morChosen(s, mode, touched.size, lines.size)) {
       // MERGE-ON-READ UPDATE = DV the old images + APPEND the new:
       // write amplification is the MATCHED rows' bytes, not the
       // touched files' — the point-update regime
-      val schema = snapshotSchema(s, root, v).getOrElse(
+      val schema = m.headers.schema.getOrElse(
         readSnapshotMerged(s, root, Some(v)).schema)
-      val live = readTouchedWithPos(s, root, v, touched)
+      val live = readTouchedWithPos(s, root, m, touched)
       val hits = live.filter(coalesce(pred, lit(false)))
       if (hits.limit(1).count() == 0L) return v
       val before = hits.drop("__graft_dv_f", "__graft_dv_p")
@@ -2616,7 +2317,7 @@ object ScaleOps extends QueryModule {
         dvNew = Some(dvRows))
     }
     // merged header schema — same rationale as deleteWhereSnapshot
-    val base = readTouched(s, root, v, touched)
+    val base = readTouched(s, root, m, touched)
     // the match flag is evaluated on the OLD row image and carried
     // through the projection — re-evaluating the predicate on
     // updated values would mislabel rows whose SET changes the very
@@ -2715,7 +2416,7 @@ object ScaleOps extends QueryModule {
       catch { case e: Throwable => Left(e) }
     firstFailure(Seq(dupCheck)).orElse(planned.left.toOption)
       .foreach(e => throw e)
-    val MergePlan(v, lines, keepStats, anyBounds, touched, untouched) =
+    val MergePlan(v, m, keepStats, anyBounds, touched, untouched) =
       planned.toOption.get.getOrElse {
         // merging into an empty store bootstraps it: everything is an
         // insert, so v1 = the batch (the CREATE TABLE AS face of MERGE)
@@ -2726,7 +2427,7 @@ object ScaleOps extends QueryModule {
       return commitVersion(s, root, updates, parentLines = untouched,
         statsCol = if (anyBounds) Some(keepStats.mkString(",")) else None,
         tag, cdf = Some((updates, updates.limit(0))), expectParent = Some(v))
-    if (morChosen(s, mode, touched.size, lines.size)) {
+    if (morChosen(s, mode, touched.size, m.entries.size)) {
       // MERGE-ON-READ upsert — the CDC-sink write-amplification fix:
       // matched preimages become DV positions, the WHOLE batch lands
       // as new appended files (replaced keys' new images + inserts),
@@ -2734,7 +2435,7 @@ object ScaleOps extends QueryModule {
       // small upserts now costs O(batch) writes per trigger instead
       // of O(touched files); compaction materializes the DVs away on
       // its own cadence, exactly like the small-file tail.
-      val live = readTouchedWithPos(s, root, v, touched)
+      val live = readTouchedWithPos(s, root, m, touched)
       val matchedRows = live.join(updates.select(keyCols.map(col): _*),
         keyCols, "left_semi")
       val replaced = matchedRows.drop("__graft_dv_f", "__graft_dv_p")
@@ -2751,7 +2452,7 @@ object ScaleOps extends QueryModule {
     // may disagree on columns among themselves — the header schema
     // null-fills whatever any file physically lacks (planMerge's
     // require already decided whether NEW columns are allowed in)
-    val base = readTouched(s, root, v, touched)
+    val base = readTouched(s, root, m, touched)
     val survivors = base.join(updates.select(keyCols.map(col): _*),
       keyCols, "left_anti")
     // CDF decomposes an update into delete(preimage) + insert(row):
@@ -2766,11 +2467,11 @@ object ScaleOps extends QueryModule {
   }
 
   /** What [[mergeIntoSnapshotAttempt]] plans against the head `v`:
-    * its lines, the stats columns a rewrite keeps, whether any key
+    * its listing, the stats columns a rewrite keeps, whether any key
     * carries zone maps, and the key-touched / untouched split. */
-  private case class MergePlan(v: Long, lines: Seq[String],
+  private case class MergePlan(v: Long, m: Manifest.Listing,
       keepStats: Seq[String], anyBounds: Boolean,
-      touched: Seq[String], untouched: Seq[String])
+      touched: Seq[ManifestEntry], untouched: Seq[ManifestEntry])
 
   /** The planning half of [[mergeIntoSnapshotAttempt]]; None for an
     * empty store. */
@@ -2779,12 +2480,12 @@ object ScaleOps extends QueryModule {
     val vs = snapshotVersions(s, root)
     if (vs.isEmpty) return None
     val v = vs.last
-    val lines = manifestDataLines(s, root, v)
+    val m = Manifest.read(s, root, v)
     // a rewrite keeps indexing every NAMED stats column the store
     // already carries (plus its own keys), so a multi-column store's
     // rewritten files don't silently lose their second zone map
-    val keepStats = (statsColumnsOf(s, root, v) ++ keyCols).distinct
-    val anyBounds = keyCols.exists(k => manifestBounds(s, root, v, k).nonEmpty)
+    val keepStats = (m.statsColumns ++ keyCols).distinct
+    val anyBounds = keyCols.exists(m.bounds(_).nonEmpty)
     // EVOLVE-ON-MERGE (the Delta mergeSchema composition of s14 and
     // s11): with evolveSchema the batch may CARRY columns the store
     // lacks — rewritten survivors null-fill them, untouched files
@@ -2795,15 +2496,15 @@ object ScaleOps extends QueryModule {
     // the VERSION's merged one: its `#schema:` header, or for a
     // pre-header manifest the mergeSchema footer sweep — post-
     // evolution files legitimately disagree column-wise.
-    val storeCols = snapshotSchema(s, root, v).map(_.fieldNames.toSeq)
+    val storeCols = m.headers.schema.map(_.fieldNames.toSeq)
       .getOrElse(readSnapshotMerged(s, root, Some(v)).columns.toSeq)
     val newCols = updates.columns.toSet -- storeCols
     require(evolveSchema || newCols.isEmpty,
       s"merge batch carries columns the store lacks (${newCols.mkString(",")}); " +
         "pass evolveSchema=true to evolve, or project them away")
-    val (touched, untouched) = keysTouchedLines(s, root, v, lines,
-      updates, keyCols.map(k => k -> k))
-    Some(MergePlan(v, lines, keepStats, anyBounds, touched, untouched))
+    val (touched, untouched) = keysTouchedLines(s, m, updates,
+      keyCols.map(k => k -> k))
+    Some(MergePlan(v, m, keepStats, anyBounds, touched, untouched))
   }
 
   /** Batch-tagged IDEMPOTENT merge — [[snapshotAppendOnce]]'s
@@ -2832,11 +2533,11 @@ object ScaleOps extends QueryModule {
     * inside its `[min, max]` interval. Broadcast of the driver-held
     * per-file intervals against the batch; the collect is file-grain
     * paths, bounded by what the batch actually hits. */
-  private def keyTouchedLines(s: SparkSession, lines: Seq[String],
+  private def keyTouchedLines(s: SparkSession, lines: Seq[ManifestEntry],
       bounds: Map[String, (Long, Long)], updates: DataFrame,
-      keyCol: String): (Seq[String], Seq[String]) = {
+      keyCol: String): (Seq[ManifestEntry], Seq[ManifestEntry]) = {
     import s.implicits._
-    val statted = lines.map(_.split('\t')(0)).filter(bounds.contains)
+    val statted = lines.map(_.path).filter(bounds.contains)
     val hit: Set[String] =
       if (statted.isEmpty) Set.empty
       else {
@@ -2848,10 +2549,7 @@ object ScaleOps extends QueryModule {
           .select(col("__f")).distinct()
           .collect().map(_.getString(0)).toSet // bounded: touched paths
       }
-    lines.partition { line =>
-      val f = line.split('\t')(0)
-      !bounds.contains(f) || hit(f)
-    }
+    lines.partition(e => !bounds.contains(e.path) || hit(e.path))
   }
 
   /** COMPOSITE-KEY touched-file planning: each (target key, source
@@ -2863,16 +2561,15 @@ object ScaleOps extends QueryModule {
     * files, never lose a match — the same degrade-to-keep contract
     * as single-key planning, and at 100 TB a two-column key prunes
     * with whichever of its columns the store happens to cluster on. */
-  private def keysTouchedLines(s: SparkSession, root: String, v: Long,
-      lines: Seq[String], updates: DataFrame,
-      pairs: Seq[(String, String)]): (Seq[String], Seq[String]) = {
+  private def keysTouchedLines(s: SparkSession, m: Manifest.Listing,
+      updates: DataFrame, pairs: Seq[(String, String)])
+      : (Seq[ManifestEntry], Seq[ManifestEntry]) = {
     val untouchedFiles = pairs.flatMap { case (tKey, sKey) =>
-      val bounds = manifestBounds(s, root, v, tKey)
+      val bounds = m.bounds(tKey)
       if (bounds.isEmpty) Nil
-      else keyTouchedLines(s, lines, bounds, updates, sKey)
-        ._2.map(_.split('\t')(0))
+      else keyTouchedLines(s, m.entries, bounds, updates, sKey)._2.map(_.path)
     }.toSet
-    lines.partition(l => !untouchedFiles.contains(l.split('\t')(0)))
+    m.entries.partition(e => !untouchedFiles.contains(e.path))
   }
 
   /** One clause of a GENERAL SQL MERGE, pre-lowered by the resolution
@@ -2941,10 +2638,10 @@ object ScaleOps extends QueryModule {
     require(vs.nonEmpty, s"no committed snapshots under $root — " +
       "CREATE the table (or publish v1) before a general MERGE")
     val v = vs.last
-    val lines = manifestDataLines(s, root, v)
-    val keepStats = (statsColumnsOf(s, root, v) ++ keys.map(_._1)).distinct
-    val anyBounds = keys.exists(k => manifestBounds(s, root, v, k._1).nonEmpty)
-    val headerSchema = snapshotSchema(s, root, v).getOrElse(
+    val m = Manifest.read(s, root, v)
+    val keepStats = (m.statsColumns ++ keys.map(_._1)).distinct
+    val anyBounds = keys.exists(k => m.bounds(k._1).nonEmpty)
+    val headerSchema = m.headers.schema.getOrElse(
       readSnapshotMerged(s, root, Some(v)).schema)
     // EVOLVE-ON-MERGE for the general shapes: `evolved` appends the
     // statement's NEW target columns (source columns the store
@@ -2960,8 +2657,8 @@ object ScaleOps extends QueryModule {
     // touched by construction ("make target mirror source" IS a full
     // rewrite). Without such clauses the zone maps bound it as ever.
     val (touched, untouched) =
-      if (bySource.nonEmpty) (lines, Seq.empty[String])
-      else keysTouchedLines(s, root, v, lines, updates, keys)
+      if (bySource.nonEmpty) (m.entries, Seq.empty[ManifestEntry])
+      else keysTouchedLines(s, m, updates, keys)
     // MERGE-ON-READ for the general shapes too (bySource excluded —
     // its rewrite is every file by definition, so CoW IS the right
     // materialization): fired-on target rows become DV positions,
@@ -2969,13 +2666,13 @@ object ScaleOps extends QueryModule {
     // in their files — the CDC envelope's per-trigger write drops to
     // O(batch) exactly like the canonical upsert's.
     val useMor = bySource.isEmpty && touched.nonEmpty &&
-      morChosen(s, mode, touched.size, lines.size)
+      morChosen(s, mode, touched.size, m.entries.size)
     val base =
       if (touched.isEmpty)
         s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           schema)
-      else if (useMor) readTouchedWithPos(s, root, v, touched)
-      else readTouched(s, root, v, touched)
+      else if (useMor) readTouchedWithPos(s, root, m, touched)
+      else readTouched(s, root, m, touched)
     val clash = (base.columns.filterNot(_.startsWith("__graft_dv_")) ++
       updates.columns).filter(c =>
       c.startsWith("__t_") || c.startsWith("__s_") || c == "__graft_act")
@@ -3110,10 +2807,11 @@ object ScaleOps extends QueryModule {
     require(vs.nonEmpty, s"no committed snapshots under $root")
     val v = vs.last
     val fs = fsOf(s, new Path(root))
-    val lines = manifestDataLines(s, root, v)
-    val (small, big) = lines.partition { line =>
-      fs.getFileStatus(new Path(line.split('\t')(0))).getLen < targetBytes / 2
-    }
+    val m = Manifest.read(s, root, v)
+    // the `sz:` field when the line carries one, else one stat
+    def len(e: ManifestEntry) =
+      e.size.getOrElse(fs.getFileStatus(new Path(e.path)).getLen)
+    val (small, big) = m.entries.partition(len(_) < targetBytes / 2)
     // DV'd right-sized files join the rewrite REGARDLESS of size:
     // compaction is the standing MATERIALIZER for merge-on-read
     // deletion vectors — the rewrite drops the DV'd rows physically,
@@ -3121,12 +2819,10 @@ object ScaleOps extends QueryModule {
     // once the pre-compaction versions expire. Same cadence argument
     // as the small-file tail: MoR writes cheap debt, compaction pays
     // it down in bulk.
-    val (dvBig, cleanBig) = big.partition(l => dvOf(l).isDefined)
+    val (dvBig, cleanBig) = big.partition(_.dv.isDefined)
     val rewrite = small ++ dvBig
     if (small.size <= 1 && dvBig.isEmpty) return v
-    val rewriteFiles = rewrite.map(_.split('\t')(0))
-    val totalSmall = rewriteFiles
-      .map(f => fs.getFileStatus(new Path(f)).getLen).sum
+    val totalSmall = rewrite.map(len).sum
     val nOut = math.max(1L, (totalSmall + targetBytes - 1) / targetBytes).toInt
     // the clustering key is the FIRST declared column (a multi-column
     // caller range-clusters on the leading key); the commit keeps
@@ -3140,7 +2836,7 @@ object ScaleOps extends QueryModule {
       case Some(c) => src.repartitionByRange(nOut, col(c))
       case None => src.coalesce(nOut)
     }
-    val keepStats = (statsColumnsOf(s, root, v) ++
+    val keepStats = (m.statsColumns ++
       statsCol.toSeq.flatMap(_.split(',').map(_.trim)).filter(_.nonEmpty))
       .distinct
     // compaction changes no rows: an EMPTY committed feed, so
@@ -3640,7 +3336,7 @@ object ScaleOps extends QueryModule {
     * commit it as a new FULL version carrying MULTI-COLUMN stats
     * (zone maps on both curve dimensions, optional Blooms), so
     * predicates on EITHER column — and especially on both — prune
-    * through [[planSnapshotFiles]]' conjunctive per-column check.
+    * through [[pruneFiles]]' conjunctive per-column check.
     * This is the standing remedy for a store whose ingest order
     * matches neither read key (the source-clustered shape s13 works
     * around with Blooms): one rewrite, and both read keys get
@@ -4211,15 +3907,11 @@ object ScaleOps extends QueryModule {
     * (new quality scores, new provenance fields, new labels). */
   def readSnapshotMerged(s: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"snapshot v$v not committed (have ${vs.mkString(",")})")
+    val v = resolveVersion(s, root, version)
+    val m = Manifest.read(s, root, v)
     if (!snapshotHasDvs(s, root, v))
-      s.read.option("mergeSchema", "true")
-        .parquet(manifestFiles(s, root, v): _*)
-    else readLinesDv(s, root, manifestDataLines(s, root, v),
-      schema = None, merged = true)
+      s.read.option("mergeSchema", "true").parquet(m.files: _*)
+    else readLinesDv(s, root, m.entries, schema = None, merged = true)
   }
 
   /** Build-once fixture for s11 (own store): v1 = the corpus's

@@ -5,6 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import graft.operators.ScaleOps
+import graft.snapshot.Manifest
 import graft.streaming.SnapshotStream
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
@@ -236,8 +237,7 @@ object SnapshotDataSource {
     // Only a pre-header manifest pays the legacy mergeSchema sweep.
     val schema = ScaleOps.snapshotSchema(s, root, v).getOrElse {
       footerSweeps.incrementAndGet()
-      val (_, files) = ScaleOps.planSnapshotFiles(s, root, Some(v),
-        None, None, None)
+      val files = ScaleOps.manifestFiles(s, root, v)
       require(files.nonEmpty,
         s"snapshot v$v of $root lists no data files and carries no " +
           "#schema: header; no schema source")
@@ -739,8 +739,8 @@ class SnapshotScan(
           val sb = new SnapshotScanBuilder(root, version, tableSchema,
             statsCol)
           sb.pushFilters(all)
-          val (_, kept) = ScaleOps.planSnapshotFiles(s, root,
-            Some(version), sb.plannedConstraints)
+          val m = Manifest.read(s, root, version)
+          val kept = ScaleOps.pruneFiles(s, m, sb.plannedConstraints)
           // subset restriction intersects the pruned list: the
           // composed merge-on-read plan reads the version's clean
           // lines here while its DV'd lines go through the v1
@@ -748,7 +748,7 @@ class SnapshotScan(
           val files = subset match {
             case None => kept
             case Some(ss) =>
-              val dvd = ScaleOps.manifestDvs(s, root, version).keySet
+              val dvd = m.dvs.keySet
               if (ss == "dvd") kept.filter(dvd) else kept.filterNot(dvd)
           }
           val index = new InMemoryFileIndex(s, files.map(new Path(_)),

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.operators.ScaleOps
+import graft.snapshot.Manifest
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -45,15 +46,15 @@ object SnapshotDvReadPlan {
     * DV-carrying relation's scan for. */
   def composedRead(spark: SparkSession, root: String, v: Long,
       statsCol: Option[String]): DataFrame = {
-    val lines = ScaleOps.manifestDataLines(spark, root, v)
-    val (dvd, clean) = lines.partition(l => ScaleOps.lineHasDv(l))
+    val m = Manifest.read(spark, root, v)
+    val (dvd, clean) = m.entries.partition(_.dv.isDefined)
     require(dvd.nonEmpty,
       s"composedRead on v$v of $root, which carries no deletion vectors")
-    val schema = ScaleOps.snapshotSchema(spark, root, v).getOrElse(
+    val schema = m.headers.schema.getOrElse(
       ScaleOps.readSnapshotMerged(spark, root, Some(v)).schema)
     val masked = {
-      val index = new SnapshotPruningFileIndex(spark, root, v, dvd,
-        schema, statsCol)
+      val index = new SnapshotPruningFileIndex(spark, root, v,
+        m.copy(entries = dvd), schema, statsCol)
       val rel = HadoopFsRelation(index, new StructType(), schema, None,
         new ParquetFileFormat, Map.empty[String, String])(spark)
       val delDf = ScaleOps.dvRowsOf(spark, root, dvd)
@@ -79,22 +80,23 @@ object SnapshotDvReadPlan {
 }
 
 /** A v1 [[FileIndex]] over a FIXED subset of a committed snapshot
-  * version's manifest lines, pruned at listing time: the
+  * version's manifest entries (`lines`, with the version's headers),
+  * pruned at listing time: the
   * `dataFilters` the file-source strategy hands down translate to
   * data-source Filters and run through the connector's own
   * stat-space constraint mapping ([[SnapshotScanBuilder]]), so zone
   * maps and per-file Bloom fields skip files for the v1 plan exactly
-  * as they do for the DSv2 scan. Listing is METADATA-ONLY: lengths
-  * come from the manifest's `sz:` fields (one FS stat only for
-  * legacy lines that predate the field) — no directory walk, no
-  * per-file RPC storm at plan time. */
+  * as they do for the DSv2 scan. Listing is METADATA-ONLY: it prunes
+  * the entries it holds, and lengths come from their `sz:` fields
+  * (one FS stat only for legacy lines that predate the field) — no
+  * manifest re-read, no directory walk, no per-file RPC storm at
+  * plan time. */
 class SnapshotPruningFileIndex(spark: SparkSession, root: String,
-    version: Long, lines: Seq[String], schema: StructType,
+    version: Long, lines: Manifest.Listing, schema: StructType,
     statsCol: Option[String]) extends FileIndex {
 
-  private val files: Seq[String] = lines.map(_.split('\t')(0))
-  private val sizes: Map[String, Long] =
-    ScaleOps.manifestFileSizes(spark, root, version)
+  private val files: Seq[String] = lines.files
+  private val sizes: Map[String, Long] = lines.sizes
 
   /** The file list of the LAST listing — what the pruning pins
     * count (mirrors [[SnapshotScan.plannedFiles]]). */
@@ -108,11 +110,7 @@ class SnapshotPruningFileIndex(spark: SparkSession, root: String,
       .flatMap(org.apache.spark.sql.graft.SqlShims.translateFilter)
     val sb = new SnapshotScanBuilder(root, version, schema, statsCol)
     sb.pushFilters(pushed.toArray)
-    val (_, keptAll) =
-      ScaleOps.planSnapshotFiles(spark, root, Some(version),
-        sb.plannedConstraints)
-    val mine = files.toSet
-    val kept = keptAll.filter(mine)
+    val kept = ScaleOps.pruneFiles(spark, lines, sb.plannedConstraints)
     lastPlanned = kept
     val statuses = kept.map { f =>
       val p = new Path(f)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.ScaleOps
+import graft.snapshot.{Manifest, ManifestEntry}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
@@ -143,12 +144,12 @@ class SnapshotStream(spark: SparkSession, root: String,
 
   /** One consumable unit of history. */
   private sealed trait Seg
-  /** A file-sliceable hop: `files` not yet consumed (absolute indices
-    * start at `baseIdx` of the version's full emittable list);
-    * `initial` selects WHICH list — the bootstrap's full manifest
-    * listing vs an append's added-file delta. */
+  /** A file-sliceable hop: the manifest entries not yet consumed
+    * (absolute indices start at `baseIdx` of the version's full
+    * emittable list); `initial` selects WHICH list — the bootstrap's
+    * full manifest listing vs an append's added-file delta. */
   private case class FileSeg(version: Long, baseIdx: Long,
-      files: Seq[String], initial: Boolean) extends Seg
+      files: Seq[ManifestEntry], initial: Boolean) extends Seg
   /** A rewrite hop: its committed change feed, admitted atomically. */
   private case class FeedSeg(version: Long) extends Seg
 
@@ -165,16 +166,15 @@ class SnapshotStream(spark: SparkSession, root: String,
           s"change-feed hop v$v has no committed parent v${v - 1} " +
             "(vacuumed?); the delta cannot be proven — re-read the " +
             "versions directly (s04 content diff) instead")
-      // LINE-grain append detection (ScaleOps.isPureAppendHop): a
+      // LINE-grain append detection (Listing.appendsTo): a
       // merge-on-read delete keeps the file SET and changes only a
       // dv: field — a path-level subset test would emit an empty hop
       // where a delete happened
-      if (ScaleOps.isPureAppendHop(spark, root, v - 1, v)) {
-        val parent = ScaleOps.manifestFiles(spark, root, v - 1).toSet
-        FileSeg(v, 0L,
-          ScaleOps.manifestFiles(spark, root, v).filterNot(parent),
-          initial = false)
-      } else FeedSeg(v)
+      val (parent, child) =
+        (Manifest.read(spark, root, v - 1), Manifest.read(spark, root, v))
+      if (child.appendsTo(parent))
+        FileSeg(v, 0L, child.addedOver(parent), initial = false)
+      else FeedSeg(v)
     }
     def hops(afterV: Long): Iterator[Seg] =
       vs.iterator.filter(_ > afterV).map { v =>
@@ -183,7 +183,7 @@ class SnapshotStream(spark: SparkSession, root: String,
         // version's hop is its FULL content as inserts
         if (!vs.contains(v - 1) && v == vs.head &&
             startingVersion.contains(1L))
-          FileSeg(v, 0L, ScaleOps.manifestFiles(spark, root, v),
+          FileSeg(v, 0L, Manifest.read(spark, root, v).entries,
             initial = true)
         else hopSeg(v)
       }
@@ -193,13 +193,13 @@ class SnapshotStream(spark: SparkSession, root: String,
         case None =>
           val b = bootstrapV
           Iterator(FileSeg(b, 0L,
-            ScaleOps.manifestFiles(spark, root, b), initial = true)) ++
+            Manifest.read(spark, root, b).entries, initial = true)) ++
             hops(b)
       }
       case Some(o) if o.index >= 0 && o.initial =>
         // mid-bootstrap: the rest of the version's full listing
         Iterator(FileSeg(o.version, o.index,
-          ScaleOps.manifestFiles(spark, root, o.version)
+          Manifest.read(spark, root, o.version).entries
             .drop(o.index.toInt), initial = true)) ++ hops(o.version)
       case Some(o) if o.index >= 0 =>
         // mid-append: the rest of the hop's added files
@@ -208,7 +208,8 @@ class SnapshotStream(spark: SparkSession, root: String,
           s"resume hop v${o.version} has no committed parent " +
             s"v${o.version - 1} (vacuumed?); the delta cannot be proven")
         Iterator(FileSeg(o.version, o.index,
-          ScaleOps.snapshotAddedFiles(spark, root, o.version - 1, o.version)
+          Manifest.read(spark, root, o.version)
+            .addedOver(Manifest.read(spark, root, o.version - 1))
             .drop(o.index.toInt), initial = false)) ++ hops(o.version)
       case Some(o) => hops(o.version)
     }
@@ -242,16 +243,12 @@ class SnapshotStream(spark: SparkSession, root: String,
       else segs.next() match {
         case FileSeg(v, base, fls, init) =>
           vers -= 1
-          val sizes =
-            if (maxBytesPerTrigger.isDefined)
-              ScaleOps.manifestFileSizes(spark, root, v)
-            else Map.empty[String, Long]
           // admit while inside BOTH budgets; the first file of the
           // trigger is always admitted (soft-max progress guarantee)
           var take = 0
           var go = true
           while (go && take < fls.size && take < files) {
-            val sz = sizes.getOrElse(fls(take), 0L)
+            val sz = fls(take).size.getOrElse(0L)
             if (sz <= bytes || !admittedAny) {
               bytes -= math.min(sz, bytes)
               admittedAny = true
@@ -337,14 +334,15 @@ class SnapshotStream(spark: SparkSession, root: String,
             // null-fill natively, columns the stream predates are
             // not read at all (the restart rule). A BOOTSTRAP slice
             // of a version carrying deletion vectors masks them
-            // (ScaleOps.readFilesDv) — a raw read would resurrect
+            // (ScaleOps.readLinesDv) — a raw read would resurrect
             // every deleted row into the stream; append-hop slices
             // are fresh files and never carry a dv field, so the
             // header probe keeps them on the plain read.
             val body =
               if (ScaleOps.snapshotHasDvs(spark, root, v))
-                ScaleOps.readFilesDv(spark, root, v, slice, dataSchema)
-              else spark.read.schema(dataSchema).parquet(slice: _*)
+                ScaleOps.readLinesDv(spark, root, slice, Some(dataSchema),
+                  merged = true)
+              else spark.read.schema(dataSchema).parquet(slice.map(_.path): _*)
             frames += body
               .withColumn("_change_type", lit("insert"))
               .withColumn("_commit_version", lit(v))

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions.col
 /** Streaming ingest into the versioned snapshot store: one committed
   * version per micro-batch, replays absorbed by the committed-tag
   * check, and standing readers isolated from live ingest. */
-@org.scalatest.tags.Slow
 class SnapshotIngestSpec extends SparkSpec {
   import spark.implicits._
 

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions.col
   * plumbing without a hand-rolled foreachBatch, an upsert mode via
   * `mergeKey`, and a source→sink round trip that drains a store into
   * a second store with content parity. */
-@org.scalatest.tags.Slow
 class SnapshotSinkSpec extends SparkSpec {
   import spark.implicits._
 

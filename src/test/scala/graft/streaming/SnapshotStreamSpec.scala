@@ -12,7 +12,6 @@ import org.apache.spark.sql.streaming.StreamingQueryException
   * and rewrite change feeds with drain parity against the batch
   * change-feed read, resumes exactly from a checkpointed version
   * offset, and refuses to fake a delta it cannot prove. */
-@org.scalatest.tags.Slow
 class SnapshotStreamSpec extends SparkSpec {
   import spark.implicits._
 

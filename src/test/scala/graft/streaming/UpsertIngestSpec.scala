@@ -9,7 +9,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * one merged version per micro-batch, last-wins across batches,
   * replays absorbed, empty-store bootstrap, and loud failure on a
   * batch that violates the ≤1-row-per-key contract. */
-@org.scalatest.tags.Slow
 class UpsertIngestSpec extends SparkSpec {
   import spark.implicits._
 
