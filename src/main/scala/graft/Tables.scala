@@ -1,17 +1,63 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.graft.SqlShims
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md).
   *
   * Every query receives the scale-factor directory at call time, so the
   * same code runs at sf0.001 (smoke), sf0.01 (oracle) and sf0.1 (bench).
-  * Reads are plain parquet scans — Catalyst pushes filters/projections
-  * down to the scan, so no manual column selection is needed here.
+  * Reads are parquet scans under the schema of the table's footer
+  * ([[readParquet]]), so building a query's frame starts no Spark job;
+  * Catalyst pushes filters/projections down to the scan, so no manual
+  * column selection is needed here.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** `s.read.parquet(paths: _*)` without the one-task Spark job its
+    * schema inference starts: the schema is read in this process from
+    * the footer Spark's non-merging inference would pick
+    * ([[SqlShims.parquetFooterSchema]]) and handed to the reader. Where
+    * that choice cannot be reproduced exactly — schema merging is on,
+    * a path is missing or a glob, a directory holds a visible
+    * subdirectory (partition discovery), a `_metadata` or
+    * `_common_metadata` summary file, or no data file at all, or the
+    * footer does not read — this is a plain `s.read.parquet`, so Spark
+    * infers and raises its own errors. Every fixed-schema parquet read
+    * goes through here. */
+  private[graft] def readParquet(s: SparkSession, paths: String*): DataFrame =
+    flatLeafFiles(s, paths)
+      .flatMap(files => Try(SqlShims.parquetFooterSchema(s, files)).toOption.flatten)
+      .fold(s.read.parquet(paths: _*))(s.read.schema(_).parquet(paths: _*))
+
+  /** The data files Spark's listing of `paths` finds when every path is
+    * a file or a directory of files; None otherwise (see [[readParquet]]). */
+  private[graft] def flatLeafFiles(s: SparkSession, paths: Seq[String]): Option[Seq[String]] = {
+    val conf = SqlShims.hadoopConf(s)
+    // names Spark's file listing skips (HadoopFSUtils.shouldFilterOutPathName)
+    def skipped(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    // summaries: listed despite the `_`, and inferred from before any data file
+    def summary(n: String) = n.startsWith("_metadata") || n.startsWith("_common_metadata")
+    val leaves = paths.map { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      if (p.exists("{}[]*?\\".contains(_))) None
+      else Try(fs.getFileStatus(path)).toOption.flatMap { st =>
+        val seen = (if (st.isFile) Seq(st) else fs.listStatus(path).toSeq)
+          .filter(c => summary(c.getPath.getName) || !skipped(c.getPath.getName))
+        if (seen.exists(c => c.isDirectory || summary(c.getPath.getName)) ||
+            (st.isFile && seen.isEmpty)) None
+        else Some(seen.map(_.getPath.toString))
+      }
+    }
+    val files = leaves.flatten.flatten
+    if (leaves.contains(None) || files.isEmpty) None else Some(files)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

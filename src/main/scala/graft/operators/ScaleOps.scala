@@ -761,7 +761,7 @@ object ScaleOps extends QueryModule {
             val now = snapshotVersions(s, root)
             val intervening = now.filter(_ > before)
             val appendsOnly = intervening.forall(v =>
-              now.contains(v - 1) && isPureAppendHop(s, root, v - 1, v))
+              now.contains(v - 1) && appendedEntries(s, root, v - 1, v).isDefined)
             if (!appendsOnly) throw new IllegalStateException(
               "concurrent rewrite commit(s) " +
                 s"${intervening.mkString(", ")} conflict with this " +
@@ -992,18 +992,21 @@ object ScaleOps extends QueryModule {
   private[graft] def manifestFiles(s: SparkSession, root: String, v: Long): Seq[String] =
     Manifest.read(s, root, v).files
 
-  /** Is hop parent→v a PURE APPEND (child's manifest carries every
-    * parent LINE verbatim, plus new ones)? — the incremental-consumer
-    * cue. The check is on LINES, not file paths: a merge-on-read
-    * delete keeps the exact file SET and changes only a line's `dv:`
-    * field, so a path-level subset test would call it an append and
-    * silently emit an EMPTY hop where a delete happened. Appends
-    * always carry parent lines verbatim (delta manifests by
-    * construction, checkpoints by copy), so the stricter test never
-    * demotes a real append. */
-  private[graft] def isPureAppendHop(s: SparkSession, root: String,
-      parent: Long, v: Long): Boolean =
-    Manifest.read(s, root, v).appendsTo(Manifest.read(s, root, parent))
+  /** The entries hop parent→v ADDED when the hop is a PURE APPEND
+    * (child's manifest carries every parent LINE verbatim, plus new
+    * ones), None otherwise — the incremental-consumer cue, answered
+    * from one read of each listing. The check is on LINES, not file
+    * paths: a merge-on-read delete keeps the exact file SET and
+    * changes only a line's `dv:` field, so a path-level subset test
+    * would call it an append and silently emit an EMPTY hop where a
+    * delete happened. Appends always carry parent lines verbatim
+    * (delta manifests by construction, checkpoints by copy), so the
+    * stricter test never demotes a real append. */
+  private def appendedEntries(s: SparkSession, root: String,
+      parent: Long, v: Long): Option[Seq[ManifestEntry]] = {
+    val (child, par) = (Manifest.read(s, root, v), Manifest.read(s, root, parent))
+    if (child.appendsTo(par)) Some(child.addedOver(par)) else None
+  }
 
   // ---------------------------------------------------------------
   // Stat space — ONE Long-typed manifest format indexes integral,
@@ -1157,7 +1160,7 @@ object ScaleOps extends QueryModule {
         StructType(Seq(StructField("f", StringType),
           StructField("pos", LongType))))
     else withDv.groupBy(_._2).map { case (dir, pairs) =>
-      s.read.parquet(new org.apache.hadoop.fs.Path(root, dir).toString)
+      Tables.readParquet(s, new org.apache.hadoop.fs.Path(root, dir).toString)
         .filter(col("f").isin(pairs.map(_._1): _*))
         .select(col("f"), col("pos"))
     }.reduce(_.unionByName(_))
@@ -1193,7 +1196,7 @@ object ScaleOps extends QueryModule {
       case Some(sc) => s.read.schema(sc).parquet(files: _*)
       case None if merged =>
         s.read.option("mergeSchema", "true").parquet(files: _*)
-      case None => readParquetPlain(s, files)
+      case None => Tables.readParquet(s, files: _*)
     }
     val (dvd, clean) = lines.partition(_.dv.isDefined)
     if (dvd.isEmpty) rd(clean.map(_.path))
@@ -1210,15 +1213,6 @@ object ScaleOps extends QueryModule {
       else masked.unionByName(rd(clean.map(_.path)), allowMissingColumns = true)
     }
   }
-
-  /** `s.read.parquet(files)` without its schema-inference Spark job:
-    * the schema comes from the same single footer that inference
-    * would read ([[SqlShims.parquetFooterSchema]]), read in this
-    * process — a job saved on every snapshot read and lookup. */
-  private[graft] def readParquetPlain(s: SparkSession,
-      files: Seq[String]): DataFrame =
-    SqlShims.parquetFooterSchema(s, files)
-      .fold(s.read)(s.read.schema(_)).parquet(files: _*)
 
   // ---------------------------------------------------------------
   // Per-file Bloom fingerprints — point-lookup file skipping
@@ -1311,7 +1305,7 @@ object ScaleOps extends QueryModule {
     val base = if (kept.nonEmpty)
       readLinesDv(s, root, kept, schema = None, merged = false)
       // every file proven key-free: one footer for the schema, 0 rows
-      else readParquetPlain(s, m.files.take(1)).limit(0)
+      else Tables.readParquet(s, m.files.take(1): _*).limit(0)
     base.filter(col(colName).isin(keys.distinct: _*))
   }
 
@@ -1675,7 +1669,7 @@ object ScaleOps extends QueryModule {
     val v = resolveVersion(s, root, version)
     val m = Manifest.read(s, root, v)
     if (!snapshotHasDvs(s, root, v)) // one header probe; keeps the
-      readParquetPlain(s, m.files) // plain scan plan
+      Tables.readParquet(s, m.files: _*) // plain scan plan
     else readLinesDv(s, root, m.entries, schema = None, merged = false)
   }
 
@@ -1697,7 +1691,7 @@ object ScaleOps extends QueryModule {
       stats.get(e.path).forall { case (mn, mx) => mx >= lo && mn <= hi })
     val base = if (kept.nonEmpty)
       readLinesDv(s, root, kept, schema = None, merged = false)
-    else s.read.parquet(m.files: _*)
+    else Tables.readParquet(s, m.files: _*)
       // schema-only; predicate yields 0 rows (no DV masking needed)
     base.filter(col(colName) >= lo && col(colName) <= hi)
   }
@@ -1786,7 +1780,7 @@ object ScaleOps extends QueryModule {
   def readRelease(s: SparkSession, root: String, v: Long): DataFrame = {
     require(hasRelease(s, root, v),
       s"no committed release for snapshot v$v under $root")
-    s.read.parquet(releaseFiles(s, root, v): _*)
+    Tables.readParquet(s, releaseFiles(s, root, v): _*)
   }
 
   /** The RELEASE REPORT content — the provenance bundle of a corpus
@@ -1962,12 +1956,6 @@ object ScaleOps extends QueryModule {
       .orderBy(col("lang"))
   }
 
-  /** Files ADDED between two committed versions — a pure manifest
-    * set-difference, no data read and no listing. */
-  private[graft] def snapshotAddedFiles(s: SparkSession, root: String,
-      vFrom: Long, vTo: Long): Seq[String] =
-    Manifest.read(s, root, vTo).addedOver(Manifest.read(s, root, vFrom)).map(_.path)
-
   /** INCREMENTAL (change-data-feed-shaped) read: the rows version
     * `vTo` ADDED over `vFrom`, resolved at FILE grain from the two
     * manifests alone — because [[appendSnapshot]] reuses the parent's
@@ -1989,10 +1977,17 @@ object ScaleOps extends QueryModule {
     require(vs.contains(vFrom) && vs.contains(vTo),
       s"versions v$vFrom, v$vTo must both be committed (have ${vs.mkString(",")})")
     require(vFrom <= vTo, s"change read runs forward (v$vFrom > v$vTo)")
-    val added = snapshotAddedFiles(s, root, vFrom, vTo)
-    if (added.isEmpty) readSnapshot(s, root, Some(vTo)).limit(0)
-    else s.read.parquet(added: _*)
+    readAdded(s, root, vTo,
+      Manifest.read(s, root, vTo).addedOver(Manifest.read(s, root, vFrom)))
   }
+
+  /** The rows of `added`, entries of version `vTo` found from the
+    * manifests alone (no directory listing); an empty frame of `vTo`'s
+    * schema when nothing was added. */
+  private def readAdded(s: SparkSession, root: String, vTo: Long,
+      added: Seq[ManifestEntry]): DataFrame =
+    if (added.isEmpty) readSnapshot(s, root, Some(vTo)).limit(0)
+    else Tables.readParquet(s, added.map(_.path): _*)
 
   /** The committed change feed of version `v`, if the commit wrote
     * one: `(inserted, deleted)` row frames. None ⇒ the commit wrote
@@ -2005,8 +2000,8 @@ object ScaleOps extends QueryModule {
     import org.apache.hadoop.fs.Path
     val chP = new Path(root, s"changes-v$v")
     if (!fsOf(s, chP).exists(chP)) None
-    else Some((s.read.parquet(new Path(chP, "ins").toString),
-      s.read.parquet(new Path(chP, "del").toString)))
+    else Some((Tables.readParquet(s, new Path(chP, "ins").toString),
+      Tables.readParquet(s, new Path(chP, "del").toString)))
   }
 
   /** CHANGE-DATA-FEED READ (the Delta `table_changes` shape): every
@@ -2062,14 +2057,12 @@ object ScaleOps extends QueryModule {
             s"change-feed hop v$v has no committed parent v${v - 1} " +
               "(vacuumed?); the delta cannot be proven — re-read the " +
               "versions directly (s04 content diff) instead")
-        } else {
-          val parent = v - 1
-          val pureAppend = isPureAppendHop(s, root, parent, v)
-          if (pureAppend)
-            readSnapshotChanges(s, root, parent, v)
+        } else appendedEntries(s, root, v - 1, v) match {
+          case Some(added) =>
+            readAdded(s, root, v, added)
               .withColumn("_change_type", lit("insert"))
               .withColumn("_commit_version", lit(v))
-          else snapshotChangeFiles(s, root, v) match {
+          case None => snapshotChangeFiles(s, root, v) match {
             case Some((ins, del)) =>
               // allowMissingColumns: after an evolve-on-merge the
               // postimages carry columns the preimages never had
@@ -2904,12 +2897,11 @@ object ScaleOps extends QueryModule {
     // fold in memory across the pending hops; ONE state commit at
     // the end — sync granularity is the call, not the version
     var state: DataFrame = cursor match {
-      case Some(c) => s.read.parquet(new Path(outP, s"state-v$c").toString)
+      case Some(c) => Tables.readParquet(s, new Path(outP, s"state-v$c").toString)
       case None => profile(readSnapshot(s, root, Some(todo.head))).limit(0)
     }
     var prev: Option[Long] = cursor.filter(vs.contains)
     todo.foreach { v =>
-      val pureAppend = prev.exists(p => isPureAppendHop(s, root, p, v))
       // signed fold: additive profiles subtract cleanly, and a lang
       // whose docs all vanish drops out (matching a recompute)
       def fold(deltas: DataFrame): DataFrame =
@@ -2918,20 +2910,20 @@ object ScaleOps extends QueryModule {
           .agg(sum(col("n_docs") * col("__sign")).as("n_docs"),
             sum(col("n_chars") * col("__sign")).as("n_chars"))
           .where(col("n_docs") > 0)
-      state =
-        if (pureAppend)
-          fold(profile(readSnapshotChanges(s, root, prev.get, v))
-            .withColumn("__sign", lit(1L)))
-        else if (prev.isDefined && snapshotChangeFiles(s, root, v).isDefined) {
-          // rewrite hop WITH a committed feed: work ∝ the hop's row
-          // delta (delete/merge/compact never recompute the corpus)
-          val (ins, del) = snapshotChangeFiles(s, root, v).get
-          fold(profile(ins).withColumn("__sign", lit(1L))
-            .unionByName(profile(del).withColumn("__sign", lit(-1L))))
-        } else { // bootstrap (no cursor) is a full read by nature, not a fallback
-          if (prev.isDefined) syncRecomputes.incrementAndGet()
-          profile(readSnapshot(s, root, Some(v)))
+      state = prev.flatMap(appendedEntries(s, root, _, v)) match {
+        case Some(added) =>
+          fold(profile(readAdded(s, root, v, added)).withColumn("__sign", lit(1L)))
+        case None => prev.flatMap(_ => snapshotChangeFiles(s, root, v)) match {
+          case Some((ins, del)) =>
+            // rewrite hop WITH a committed feed: work ∝ the hop's row
+            // delta (delete/merge/compact never recompute the corpus)
+            fold(profile(ins).withColumn("__sign", lit(1L))
+              .unionByName(profile(del).withColumn("__sign", lit(-1L))))
+          case None => // bootstrap (no cursor) is a full read by nature, not a fallback
+            if (prev.isDefined) syncRecomputes.incrementAndGet()
+            profile(readSnapshot(s, root, Some(v)))
         }
+      }
       prev = Some(v)
     }
     // crash debris from an earlier sync (state written, rename never
@@ -2959,7 +2951,7 @@ object ScaleOps extends QueryModule {
       .collect { case n if n.startsWith("state-v") =>
         n.stripPrefix("state-v").toLong }.sorted
     require(vs.nonEmpty, s"no committed sync state under $outDir")
-    s.read.parquet(new Path(outP, s"state-v${vs.last}").toString)
+    Tables.readParquet(s, new Path(outP, s"state-v${vs.last}").toString)
   }
 
   /** s08 — the incremental read as an oracle-gated query: per-language

@@ -128,7 +128,7 @@ object Sinks {
     // transient IO) propagates — treating it as empty would silently
     // discard the whole dim table on merge.
     val existing =
-      if (fs0.exists(dstP)) spark.read.parquet(dimPath)
+      if (fs0.exists(dstP)) graft.Tables.readParquet(spark, dimPath)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], updates.schema)
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(versionCol).desc, col("__src").desc)

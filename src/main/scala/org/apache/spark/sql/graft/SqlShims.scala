@@ -97,6 +97,14 @@ object SqlShims {
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       commitPool)(body)
 
+  /** The session's Hadoop configuration (the context's plus the
+    * session's `spark.hadoop.*` settings) — the one Spark's own file
+    * listing and footer reads use. */
+  def hadoopConf(session: org.apache.spark.sql.SparkSession)
+      : org.apache.hadoop.conf.Configuration =
+    session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
+
   /** The schema Spark's NON-merging Parquet inference would give a read
     * of `files`, read in this process from ONE footer — the first file
     * in path order, the one `ParquetUtils.inferSchema` picks — with
@@ -107,12 +115,11 @@ object SqlShims {
   def parquetFooterSchema(session: org.apache.spark.sql.SparkSession, files: Seq[String])
       : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.execution.datasources.parquet._
-    val state = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState
-    val conf = state.conf
+    val conf = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
     if (files.isEmpty || conf.isParquetSchemaMergingEnabled) None
     else {
-      val hadoopConf = state.newHadoopConf()
+      val hadoopConf = this.hadoopConf(session)
       val first = files.map { f =>
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(hadoopConf).makeQualified(p)

@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -42,31 +41,6 @@ class SnapshotCommitPipelineSpec extends SparkSpec {
 
   private class InjectedFault(where: String)
       extends RuntimeException(s"injected into $where")
-
-  /** Job-start properties of every job that started inside `body`. */
-  private def jobsOf(body: => Unit): Seq[java.util.Properties] = {
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
-    val ended = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(Option(e.properties).getOrElse(new java.util.Properties))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener events arrive asynchronously: wait until every
-      // started job has also ended, and the count holds still
-      val deadline = System.currentTimeMillis() + 30000
-      var seen = -1
-      while ((started.size != ended.get || started.size != seen) &&
-          System.currentTimeMillis() < deadline) {
-        seen = started.size
-        Thread.sleep(200)
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    started.toArray(Array.empty[java.util.Properties]).toSeq
-  }
 
   private val batch = Seq((5L, "U5"), (150L, "U150"), (1000L, "I1000"))
 
@@ -158,6 +132,33 @@ class SnapshotCommitPipelineSpec extends SparkSpec {
       Seq(5L, 150L))).forall(_.getProperty("spark.sql.execution.id") != null))
   }
 
+  test("change-feed, sync-state and release reads launch no schema-inference job") {
+    // the sync profiles (lang, text) rows
+    def docs(ids: Seq[Long], tag: String) =
+      ids.map(i => (i, if (i % 2 == 0) "en" else "de", s"$tag$i")).toDF("id", "lang", "text")
+    val root = freshRoot("noinfer_feeds")
+    ScaleOps.publishSnapshot(spark, root, docs(0L until 400L, "r")
+      .repartitionByRange(4, col("id")), statsCol = Some("id"))
+    def outside(jobs: Seq[java.util.Properties]) =
+      jobs.count(_.getProperty("spark.sql.execution.id") == null)
+    val out = freshRoot("noinfer_feeds_sync")
+    ScaleOps.changeFeedSync(spark, root, out)
+    // v2 a pure append, v3 a merge with a committed feed
+    ScaleOps.appendSnapshot(spark, root, docs(400L until 410L, "a"))
+    assert(ScaleOps.mergeIntoSnapshot(spark, root, "id",
+      docs(Seq(5L, 150L, 1000L), "u")) === 3L)
+    assert(jobsOf(ScaleOps.readSnapshotChangeFeed(spark, root, 1L, 3L)).isEmpty)
+    assert(jobsOf(ScaleOps.readSnapshotChanges(spark, root, 1L, 2L)).isEmpty)
+    // the second sync reads the first one's committed state
+    val sync = jobsOf(assert(ScaleOps.changeFeedSync(spark, root, out) === Seq(2L, 3L)))
+    assert(sync.nonEmpty && outside(sync) === 0,
+      s"${outside(sync)} change-feed sync jobs ran outside a SQL execution")
+    assert(jobsOf(ScaleOps.readSyncedState(spark, out)).isEmpty)
+    assert(ScaleOps.publishRelease(spark, root, 3L,
+      Seq(("card", 1L)).toDF("section", "n")))
+    assert(jobsOf(ScaleOps.readRelease(spark, root, 3L)).isEmpty)
+  }
+
   test("change feeds equal the row sets of one-write-at-a-time commits") {
     val root = seeded("feeds")
     def feed(v: Long): (Seq[(Long, String)], Seq[(Long, String)]) = {
@@ -196,8 +197,8 @@ class SnapshotCommitPipelineSpec extends SparkSpec {
       val files = ScaleOps.manifestFiles(spark, root, v)
       val inferred = spark.read.parquet(files: _*).schema
       assert(ScaleOps.readSnapshot(spark, root, Some(v)).schema === inferred, s"$root v$v")
-      assert(ScaleOps.readParquetPlain(spark, files).schema === inferred)
-      assert(ScaleOps.readParquetPlain(spark, files.reverse).schema === inferred)
+      assert(Tables.readParquet(spark, files: _*).schema === inferred)
+      assert(Tables.readParquet(spark, files.reverse: _*).schema === inferred)
     }
     // plain
     val plain = seeded("schema_plain")
