@@ -184,10 +184,11 @@ object ScaleOps extends QueryModule {
   def publishSnapshot(s: SparkSession, root: String, df: DataFrame,
       statsCol: Option[String] = None, statsBloom: Boolean = false): Long =
     // a full overwrite replaces whatever the head is — commutes with
-    // any interleaved commit, so a slot-race loser just retries
-    retryingCommit(s, root, dmlGuard = false)(
-      commitVersion(s, root, df, parentLines = Nil, statsCol, tag = None,
-        statsBloom = statsBloom))
+    // any interleaved commit, so a slot-race loser just retries — and
+    // inherits none of the replaced head's headers
+    transact(s, root, dmlGuard = false)(_ => Right(Commit(df,
+      statsCols = splitStats(statsCol), statsBloom = statsBloom,
+      inherit = false))).get
 
   /** Publish `df` as the next snapshot version WITHOUT rewriting the
     * existing data: the new manifest lists the PARENT version's
@@ -207,39 +208,34 @@ object ScaleOps extends QueryModule {
       statsCol: Option[String] = None, tag: Option[String] = None,
       statsBloom: Boolean = false): Long =
     // appends COMMUTE with any interleaved commit: a loser re-plans
-    // against the new head and re-lands the batch (retryingCommit) —
+    // against the new head and re-lands the batch ([[transact]]) —
     // two concurrent writers both land instead of one throwing
-    retryingCommit(s, root, dmlGuard = false)(
-      appendSnapshotAttempt(s, root, df, statsCol, tag, statsBloom))
+    transact(s, root, dmlGuard = false)(
+      appendPlan(df, splitStats(statsCol), tag, statsBloom)).get
 
-  private def appendSnapshotAttempt(s: SparkSession, root: String,
-      df: DataFrame, statsCol: Option[String], tag: Option[String],
-      statsBloom: Boolean): Long = {
-    val vs = snapshotVersions(s, root)
-    // The append hot path writes a DELTA manifest: `#parent:<v>` plus
-    // only this batch's lines — O(batch) metadata per append instead
-    // of O(live files), and NO read of the parent manifest at all.
-    // Every CHECKPOINT_EVERY-th version writes the resolved full
-    // listing instead (parent lines carry their inline stats/Bloom
-    // fields forward verbatim — still never a re-read of parent
-    // DATA). Growth bound over N appends: O(N · batch-files) delta
-    // lines + O(N/C · live-files) checkpoint lines — linear in data
-    // appended, vs the O(N · live-files) = O(N²) of full listings
-    // every time. Vacuum bounds live manifests as before.
-    vs.lastOption match {
-      case Some(p) if (p + 1) % CHECKPOINT_EVERY != 0 =>
-        commitVersion(s, root, df, parentLines = Nil, statsCol, tag,
-          statsBloom = statsBloom, parentRef = Some(p),
-          expectParent = Some(p))
-      case Some(p) =>
-        commitVersion(s, root, df,
-          parentLines = Manifest.read(s, root, p).entries, statsCol, tag,
-          statsBloom = statsBloom, expectParent = Some(p))
-      case None =>
-        commitVersion(s, root, df, parentLines = Nil, statsCol, tag,
-          statsBloom = statsBloom, expectParent = Some(0L))
-    }
+  /** The append hot path writes a DELTA manifest: `#parent:<v>` plus
+    * only this batch's lines — O(batch) metadata per append instead
+    * of O(live files), and only the head's headers are read, never
+    * its listing. Every CHECKPOINT_EVERY-th version writes the
+    * resolved full listing instead (parent lines carry their inline
+    * stats/Bloom fields forward verbatim — still never a re-read of
+    * parent DATA). Growth bound over N appends: O(N · batch-files)
+    * delta lines + O(N/C · live-files) checkpoint lines — linear in
+    * data appended, vs the O(N · live-files) = O(N²) of full
+    * listings every time. Vacuum bounds live manifests as before. */
+  private def appendPlan(df: DataFrame, statsCols: Seq[String],
+      tag: Option[String], statsBloom: Boolean)(head: Head): Either[Long, Commit] = {
+    val c = Commit(df, statsCols = statsCols, tag = tag, statsBloom = statsBloom)
+    Right(head.v match {
+      case 0L => c
+      case p if (p + 1) % CHECKPOINT_EVERY != 0 => c.copy(delta = true)
+      case _ => c.copy(parentLines = head.listing.entries)
+    })
   }
+
+  /** A public face's comma-separated `statsCol` as column names. */
+  private def splitStats(statsCol: Option[String]): Seq[String] =
+    statsCol.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
 
   /** Batch-tagged IDEMPOTENT append — the streaming-sink commit
     * contract (Delta/Iceberg `txn`-style): commit `df` as the next
@@ -258,20 +254,16 @@ object ScaleOps extends QueryModule {
     * merge landing between a batch's commit and its at-least-once
     * replay (the round-8 tail-only-probe finding). Sequential
     * foreachBatch replays make the newest TAGGED version the only
-    * one a replayed tag can match.
+    * one a replayed tag can match. [[transact]] runs the probe in
+    * every attempt, so a loser whose winner was a same-tag replay
+    * racer absorbs the batch instead of committing it twice.
     * One version per micro-batch; version-count and manifest-line
     * growth are [[vacuumSnapshots]]' standing remedy, exactly like
     * compact() for small files. */
   def snapshotAppendOnce(s: SparkSession, root: String, df: DataFrame,
       tag: String, statsCol: Option[String] = None): Option[Long] =
-    // the retry wraps probe AND attempt so a lost race RE-PROBES the
-    // tag — if the winner was a same-tag replay racer, the retry
-    // must absorb rather than double-commit the batch
-    retryingCommit(s, root, dmlGuard = false) {
-      if (lastCommittedTag(s, root).contains(tag)) None
-      else Some(appendSnapshotAttempt(s, root, df, statsCol, Some(tag),
-        statsBloom = false))
-    }
+    transact(s, root, dmlGuard = false, replayOf = Some(tag))(
+      appendPlan(df, splitStats(statsCol), Some(tag), statsBloom = false))
 
   /** The LAST TAGGED version's tag: the replay probe for the
     * idempotent sinks. Scans backwards past UNTAGGED versions —
@@ -294,8 +286,9 @@ object ScaleOps extends QueryModule {
     * Fan-in topologies must tag with per-writer prefixes AND probe
     * per-writer ([[committedTags]]), or give each stream its own
     * store — exactly Delta's one-`txnAppId`-per-writer rule. */
-  private def lastCommittedTag(s: SparkSession, root: String): Option[String] =
-    snapshotVersions(s, root).reverseIterator
+  private def lastCommittedTag(s: SparkSession, root: String,
+      versions: Seq[Long]): Option[String] =
+    versions.reverseIterator
       .map(v => manifestTag(s, root, v))
       .collectFirst { case Some(t) => t }
 
@@ -316,8 +309,11 @@ object ScaleOps extends QueryModule {
     Manifest.readTag(s, root, v)
   }
 
-  /** Shared publish tail: land `df`'s files under an attempt-private
-    * directory, commit `parentLines ++ newLines` as ONE manifest.
+  /** Shared publish tail: land `c.df`'s files under an attempt-private
+    * directory, commit `c.parentLines ++ newLines` as ONE manifest at
+    * version `head.v + 1`, on the condition that `head` is still the
+    * latest version. A loser throws [[CommitConflict]], which
+    * [[transact]] retries against the new head.
     *
     * The manifest's format is [[graft.snapshot.Manifest]]'s. Tag and
     * stats ride the manifest rename, so they are atomic with the file
@@ -362,21 +358,16 @@ object ScaleOps extends QueryModule {
     * attempt's debris and rethrows the original exception unwrapped;
     * no version is committed. No write re-infers a schema: the stats
     * and DV re-reads pass the schema of the frame they wrote. */
-  private def commitVersion(s: SparkSession, root: String, df: DataFrame,
-      parentLines: Seq[ManifestEntry], statsCol: Option[String],
-      tag: Option[String], statsBloom: Boolean = false,
-      parentRef: Option[Long] = None,
-      cdf: Option[(DataFrame, DataFrame)] = None,
-      expectParent: Option[Long] = None,
-      dvNew: Option[DataFrame] = None,
-      writeData: Boolean = true): Long = {
-    require(parentRef.isEmpty || parentLines.isEmpty,
+  private def commitVersion(s: SparkSession, root: String, head: Head,
+      c: Commit): Long = {
+    import c._
+    require(!delta || parentLines.isEmpty,
       "a delta manifest names its parent instead of carrying its lines")
     import org.apache.hadoop.fs.Path
     val rootP = new Path(root)
     val fs = fsOf(s, rootP)
     fs.mkdirs(new Path(rootP, "_manifests"))
-    val next = snapshotVersions(s, root).lastOption.getOrElse(0L) + 1L
+    val next = head.v + 1L
     val att = java.util.UUID.randomUUID().toString.take(8)
     val tmpData = new Path(rootP, s".tmp-data-v$next-$att")
     val dataDir = new Path(rootP, s"data-v$next-$att")
@@ -427,11 +418,9 @@ object ScaleOps extends QueryModule {
         counts
       }
     }
-    val statsColumns: Seq[String] = statsCol.toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
     val written: Either[Throwable, Seq[ManifestEntry]] =
       try Right(if (!writeData) Nil else writeDataFiles(s, df, tmpData,
-        dataDir, next, statsColumns, statsBloom))
+        dataDir, next, statsCols, statsBloom))
       catch { case e: Throwable => Left(e) }
     written.left.toOption.orElse(firstFailure(feedWrites ++ dvWrite))
       .foreach { e => debris(); throw e }
@@ -444,16 +433,17 @@ object ScaleOps extends QueryModule {
     // The version's MERGED SCHEMA rides the manifest as a `#schema:`
     // header (with a `#ts:` commit stamp) so readers resolve both
     // from ONE header read — never a footer sweep over the file list.
-    // Parent schema comes from the parent's own header (one small
-    // read, keeps the delta-append hot path O(batch)); a pre-header
-    // parent pays a single migration footer sweep here, at COMMIT
-    // time (already a data-writing operation), after which the chain
-    // is header-resolved forever.
-    val parent = expectParent.filter(_ >= 1L)
-    val parentHeaders = parent.map(Manifest.readHeaders(s, root, _))
-    val parentSchema = parent.flatMap { p =>
-      parentHeaders.flatMap(_.schema).orElse {
-        val pf = manifestFiles(s, root, p)
+    // Parent schema comes from the head's own header (read once per
+    // attempt, free when the plan already read the head's listing, so
+    // the delta-append hot path stays O(batch)); a pre-header parent
+    // pays a single migration footer sweep here, at COMMIT time
+    // (already a data-writing operation), after which the chain is
+    // header-resolved forever. A full overwrite (`inherit = false`)
+    // starts the headers afresh.
+    val parentHeaders = Option.when(inherit && head.v >= 1L)(head.headers)
+    val parentSchema = parentHeaders.flatMap { h =>
+      h.schema.orElse {
+        val pf = head.listing.files
         if (pf.isEmpty) None
         else Some(s.read.option("mergeSchema", "true").parquet(pf: _*).schema)
       }
@@ -469,16 +459,16 @@ object ScaleOps extends QueryModule {
     // entries are kept regardless, and an explicit statsCol option
     // still overrides.
     val allStatsCols =
-      (parentHeaders.flatMap(_.statsCols).getOrElse(Nil) ++ statsColumns).distinct
+      (parentHeaders.flatMap(_.statsCols).getOrElse(Nil) ++ statsCols).distinct
     // `#dvs:` header — the O(1) "this version carries deletion
     // vectors" probe every read path checks before choosing the
     // plain scan plan. Full-listing commits answer from their own
     // lines; a delta append inherits the parent's flag (its carried
     // lines may hold dv fields this manifest never sees).
     val dvs = (effectiveParent ++ newLines).exists(_.dv.isDefined) ||
-      parentRef.exists(p => snapshotHasDvs(s, root, p))
+      (delta && head.headers.dvs)
     val text = Manifest.renderText(
-      Manifest.Headers(tag, parentRef, Some(schema.json),
+      Manifest.Headers(tag, Option.when(delta)(head.v), Some(schema.json),
         Some(System.currentTimeMillis()),
         Some(allStatsCols).filter(_.nonEmpty), dvs),
       effectiveParent ++ newLines)
@@ -508,12 +498,14 @@ object ScaleOps extends QueryModule {
     //     manifest carries P's lines (or a #parent:P ref) silently
     //     DROPS any version that landed after P, even when its own
     //     slot is free (merge plans vs v1, append commits v2, merge
-    //     wins v3 → v2's files vanish from the lineage). `expectParent`
-    //     re-checks, inside the lock, that the version the caller
-    //     planned against is still the latest; a moved head loses.
-    // A loser cleans only its OWN debris and throws — callers retry
-    // the operation, which replans against the new head and re-lands
-    // the batch's data under a fresh attempt id (no loss, no orphan).
+    //     wins v3 → v2's files vanish from the lineage). The commit
+    //     re-checks, inside the lock, that `head` — the version the
+    //     caller planned against — is still the latest; a moved head
+    //     loses.
+    // A loser cleans only its OWN debris and throws [[CommitConflict]]
+    // — [[transact]] retries the operation, which replans against the
+    // new head and re-lands the batch's data under a fresh attempt id
+    // (no loss, no orphan).
     // A winner that crashes between claim and rename is finished by
     // the next writer's [[repairSlot]] — its manifest was fully
     // written before the claim, so the repair is a pure rename.
@@ -521,8 +513,7 @@ object ScaleOps extends QueryModule {
     val won = ScaleOps.commitLocks
       .computeIfAbsent(rootP.toUri.toString, _ => new Object)
       .synchronized {
-        if (!expectParent.forall(
-            _ == snapshotVersions(s, root).lastOption.getOrElse(0L)) ||
+        if (snapshotVersions(s, root).lastOption.getOrElse(0L) != head.v ||
           fs.exists(dst)) false
         else if (!claimSlot(fs, claimP, att)) false
         // Re-verify OWNERSHIP immediately before the rename: a
@@ -566,8 +557,7 @@ object ScaleOps extends QueryModule {
         fs.delete(dataDir, true)
         if (dvCounts.nonEmpty) fs.delete(new Path(rootP, dvDirName), true)
         if (cdf.isDefined) fs.delete(tmpCh, true)
-        throw new IllegalStateException(
-          s"publish: lost the commit race for v$next")
+        throw new CommitConflict(next)
       }
     }
     // committed: publish the feed under its version name (a crash in
@@ -724,50 +714,96 @@ object ScaleOps extends QueryModule {
 
   private val COMMIT_RETRIES = 3
 
-  /** BOUNDED RE-PLAN-AND-RETRY for commits that lose the optimistic
-    * race: `body` plans against the CURRENT head and commits with
-    * expectParent; a loser re-runs it (re-reading the new head,
-    * re-landing its data under a fresh attempt id) when the
-    * interleaved commits COMMUTE with the operation:
+  /** A commit that lost the optimistic race: another writer took slot
+    * `v` or moved the head first. The one failure [[transact]] retries. */
+  private[graft] final class CommitConflict(v: Long)
+      extends IllegalStateException(s"publish: lost the commit race for v$v")
+
+  /** The head one [[transact]] attempt plans against: the committed
+    * versions, from one `_manifests/` listing, and `v`, the latest (0
+    * for an empty store). The head's headers and resolved listing are
+    * read on first use, at most once: a delta append reads the headers
+    * alone and never resolves the chain, and the headers come free
+    * with a listing the plan already read. */
+  private[graft] final class Head(s: SparkSession, root: String,
+      val versions: Seq[Long]) {
+    val v: Long = versions.lastOption.getOrElse(0L)
+    private var resolved = Option.empty[Manifest.Listing]
+    def listing: Manifest.Listing = resolved.getOrElse {
+      require(v >= 1L, s"no committed snapshots under $root")
+      resolved = Some(Manifest.read(s, root, v))
+      resolved.get
+    }
+    lazy val headers: Manifest.Headers =
+      resolved.fold(Manifest.readHeaders(s, root, v))(_.headers)
+  }
+
+  /** What one attempt commits on top of its [[Head]]: `df` lands as
+    * new files indexed on `statsCols`; `parentLines` carry head lines
+    * forward, or `delta` names the head as the manifest's `#parent:`
+    * instead; `inherit` carries the head's `#schema:`/`#statscols:`
+    * forward (every op but the full overwrite). `cdf`, `dvNew` and
+    * `writeData` are [[commitVersion]]'s. */
+  private[graft] final case class Commit(df: DataFrame,
+      parentLines: Seq[ManifestEntry] = Nil, statsCols: Seq[String] = Nil,
+      tag: Option[String] = None, statsBloom: Boolean = false,
+      delta: Boolean = false, cdf: Option[(DataFrame, DataFrame)] = None,
+      dvNew: Option[DataFrame] = None, writeData: Boolean = true,
+      inherit: Boolean = true)
+
+  /** THE transaction path of every snapshot-store write: read the head
+    * once, plan against it, commit on the condition that it is still
+    * the latest version, and on a [[CommitConflict]] re-read, re-plan
+    * and re-land under a fresh attempt id. `plan` returns Left(v) for
+    * a no-op at version v, or the [[Commit]] to land. With `replayOf`
+    * every attempt first runs the replay probe: when the last tagged
+    * version already carries that tag the batch is absorbed and the
+    * result is None — also when a racing same-tag winner is what made
+    * the previous attempt lose.
+    *
+    * A loser retries only when the interleaved commits COMMUTE with
+    * the operation:
     *
     *  - APPENDS (`dmlGuard = false`) retry against anything — an
     *    append planned after ANY commit is the same append, and the
     *    serial order "their commit, then ours" is exactly what the
-    *    retry produces. Two concurrent streaming sinks now both land
+    *    retry produces. Two concurrent streaming sinks both land
     *    instead of one throwing.
     *  - DML/maintenance (`dmlGuard = true`) retries only when every
-    *    intervening hop is a PURE APPEND (the line-grain check):
-    *    re-running a DELETE/UPDATE/MERGE against "head + some new
-    *    rows" applies the statement to the new table state, the
-    *    serializable outcome. An intervening REWRITE (another DML,
-    *    compaction, z-order) conflicts — the statement's planning
-    *    premises changed under it — and the loser still refuses
-    *    loudly, the Delta ConcurrentModificationException stance.
+    *    hop between the lost attempt's head and the retry's is a PURE
+    *    APPEND (the line-grain check): re-running a DELETE/UPDATE/MERGE
+    *    against "head + some new rows" applies the statement to the
+    *    new table state, the serializable outcome. An intervening
+    *    REWRITE (another DML, compaction, z-order) conflicts — the
+    *    statement's planning premises changed under it — and the
+    *    loser refuses loudly, the Delta ConcurrentModificationException
+    *    stance.
     *
     * The retry cap ([[COMMIT_RETRIES]]) and the jittered backoff
     * bound claim-slot livelock between symmetric retriers. */
-  private[graft] def retryingCommit[T](s: SparkSession, root: String,
-      dmlGuard: Boolean)(body: => T): T = {
+  private[graft] def transact(s: SparkSession, root: String,
+      dmlGuard: Boolean, replayOf: Option[String] = None)(
+      plan: Head => Either[Long, Commit]): Option[Long] = {
+    var lost = Option.empty[(Long, CommitConflict)] // the last loser's head
     var attempt = 0
     while (true) {
-      val before = snapshotVersions(s, root).lastOption.getOrElse(0L)
-      try return body
+      val head = new Head(s, root, snapshotVersions(s, root))
+      if (replayOf.exists(lastCommittedTag(s, root, head.versions).contains))
+        return None
+      for ((before, e) <- lost if dmlGuard) {
+        val intervening = head.versions.filter(_ > before)
+        if (!intervening.forall(v => head.versions.contains(v - 1) &&
+            appendedEntries(s, root, v - 1, v).isDefined))
+          throw new IllegalStateException("concurrent rewrite commit(s) " +
+            s"${intervening.mkString(", ")} conflict with this operation; " +
+            "inspect the new head and re-run it deliberately", e)
+      }
+      try return Some(plan(head).fold(v => v, commitVersion(s, root, head, _)))
       catch {
-        case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("lost the commit race") =>
+        case e: CommitConflict =>
           attempt += 1
           if (attempt > COMMIT_RETRIES) throw e
-          if (dmlGuard) {
-            val now = snapshotVersions(s, root)
-            val intervening = now.filter(_ > before)
-            val appendsOnly = intervening.forall(v =>
-              now.contains(v - 1) && appendedEntries(s, root, v - 1, v).isDefined)
-            if (!appendsOnly) throw new IllegalStateException(
-              "concurrent rewrite commit(s) " +
-                s"${intervening.mkString(", ")} conflict with this " +
-                "operation; inspect the new head and re-run it " +
-                "deliberately", e)
-          }
+          lost = Some(head.v -> e)
           Thread.sleep(50L + scala.util.Random.nextInt(150))
       }
     }
@@ -2118,30 +2154,13 @@ object ScaleOps extends QueryModule {
     * everything when it can't). Returns the committed version. */
   def deleteFromSnapshot(s: SparkSession, root: String, colName: String,
       lo: Long, hi: Long): Long =
-    retryingCommit(s, root, dmlGuard = true)(
-      deleteFromSnapshotAttempt(s, root, colName, lo, hi))
-
-  private def deleteFromSnapshotAttempt(s: SparkSession, root: String,
-      colName: String, lo: Long, hi: Long): Long = {
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = vs.last
-    val m = Manifest.read(s, root, v)
-    val bounds = m.bounds(colName)
-    val (touched, untouched) = m.entries.partition(e =>
-      bounds.get(e.path).forall { case (mn, mx) => mx >= lo && mn <= hi })
-    if (touched.isEmpty) return v
-    val keepStats = (m.statsColumns :+ colName).distinct
-    // NULLs are outside every range: keep them (a bare NOT BETWEEN
-    // would silently delete null-keyed rows through three-valued logic)
-    val base = readTouched(s, root, m, touched)
-    val kept = base.filter(col(colName).isNull ||
-      !(col(colName) >= lo && col(colName) <= hi))
-    val dropped = base.filter(col(colName) >= lo && col(colName) <= hi)
-    commitVersion(s, root, kept, parentLines = untouched,
-      statsCol = Some(keepStats.mkString(",")), tag = None,
-      cdf = Some((kept.limit(0), dropped)), expectParent = Some(v))
-  }
+    // NULLs are outside every range: the predicate delete keeps them
+    // (a bare NOT BETWEEN would silently delete null-keyed rows
+    // through three-valued logic)
+    transact(s, root, dmlGuard = true)(deletePlan(s, root,
+      col(colName).between(lo, hi),
+      Seq(ColConstraint(colName, Some(lo), Some(hi), None)), mode = "cow",
+      alsoStats = Seq(colName))).get
 
   /** COPY-ON-WRITE DELETE for an ARBITRARY row-level predicate — the
     * engine face behind SQL `DELETE FROM cat.t WHERE …`
@@ -2203,42 +2222,46 @@ object ScaleOps extends QueryModule {
     raw.join(old, Seq("__graft_dv_f", "__graft_dv_p"), "left_anti")
   }
 
+  /** The cumulative deletion vector of `touched` once `hits` — rows
+    * of [[readTouchedWithPos]] — are deleted too: the lines' current
+    * (f, pos) rows plus the hits' positions. */
+  private def dvRowsWith(s: SparkSession, root: String,
+      touched: Seq[ManifestEntry], hits: DataFrame): DataFrame =
+    dvRowsOf(s, root, touched).unionByName(
+      hits.select(col("__graft_dv_f").as("f"), col("__graft_dv_p").as("pos")))
+
+  /** The stats columns a DML rewrite keeps indexing: every named
+    * column the listing's lines carry plus its declared header ones. */
+  private def keptStats(m: Manifest.Listing): Seq[String] =
+    (m.statsColumns ++ m.headers.statsCols.getOrElse(Nil)).distinct
+
   private[graft] def deleteWhereSnapshot(s: SparkSession, root: String,
       pred: Column, constraints: Seq[ColConstraint],
       mode: String = "auto"): Long =
-    retryingCommit(s, root, dmlGuard = true)(
-      deleteWhereSnapshotAttempt(s, root, pred, constraints, mode))
+    transact(s, root, dmlGuard = true)(
+      deletePlan(s, root, pred, constraints, mode, alsoStats = Nil)).get
 
-  private def deleteWhereSnapshotAttempt(s: SparkSession, root: String,
-      pred: Column, constraints: Seq[ColConstraint],
-      mode: String): Long = {
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = vs.last
-    val m = Manifest.read(s, root, v)
+  /** Both delete faces' plan; rewritten files also index `alsoStats`. */
+  private def deletePlan(s: SparkSession, root: String, pred: Column,
+      constraints: Seq[ColConstraint], mode: String, alsoStats: Seq[String])(
+      head: Head): Either[Long, Commit] = {
+    val m = head.listing
     val cand = pruneFiles(s, m, constraints).toSet
-    val lines = m.entries
-    val (touched, untouched) = lines.partition(e => cand(e.path))
-    if (touched.isEmpty) return v
-    val keepStats = (m.statsColumns ++ m.headers.statsCols.getOrElse(Nil)).distinct
+    val (touched, untouched) = m.entries.partition(e => cand(e.path))
+    if (touched.isEmpty) return Left(head.v)
     val hit = coalesce(pred, lit(false))
-    if (morChosen(s, mode, touched.size, lines.size)) {
+    if (morChosen(s, mode, touched.size, m.entries.size)) {
       // MERGE-ON-READ: the deleted rows' (file, position) pairs land
       // as a deletion vector; NO data file is written or rewritten —
       // a point delete costs one tiny parquet dir plus a manifest,
       // whatever the store size. Reads anti-join the positions out;
       // compaction materializes them away on its own cadence.
-      val live = readTouchedWithPos(s, root, m, touched)
-      val hits = live.filter(hit)
-      if (hits.limit(1).count() == 0L) return v // nothing matched: no-op
+      val hits = readTouchedWithPos(s, root, m, touched).filter(hit)
+      if (hits.limit(1).count() == 0L) return Left(head.v) // nothing matched
       val dropped = hits.drop("__graft_dv_f", "__graft_dv_p")
-      val dvRows = dvRowsOf(s, root, touched).unionByName(
-        hits.select(col("__graft_dv_f").as("f"),
-          col("__graft_dv_p").as("pos")))
-      return commitVersion(s, root, dropped.limit(0),
-        parentLines = untouched ++ touched, statsCol = None, tag = None,
-        cdf = Some((dropped.limit(0), dropped)), expectParent = Some(v),
-        dvNew = Some(dvRows), writeData = false)
+      return Right(Commit(dropped.limit(0), parentLines = untouched ++ touched,
+        cdf = Some((dropped.limit(0), dropped)),
+        dvNew = Some(dvRowsWith(s, root, touched, hits)), writeData = false))
     }
     // read with the VERSION's merged header schema: on a schema-
     // evolved store the touched subset's footer-inferred schema can
@@ -2248,11 +2271,8 @@ object ScaleOps extends QueryModule {
     // every DML rewrite read)
     val base = readTouched(s, root, m, touched)
     val kept = base.filter(!hit)
-    val dropped = base.filter(hit)
-    commitVersion(s, root, kept, parentLines = untouched,
-      statsCol = Some(keepStats.mkString(",")).filter(_.nonEmpty),
-      tag = None, cdf = Some((kept.limit(0), dropped)),
-      expectParent = Some(v))
+    Right(Commit(kept, untouched, (keptStats(m) ++ alsoStats).distinct,
+      cdf = Some((kept.limit(0), base.filter(hit)))))
   }
 
   /** COPY-ON-WRITE UPDATE for an ARBITRARY row-level predicate — the
@@ -2268,75 +2288,58 @@ object ScaleOps extends QueryModule {
   private[graft] def updateWhereSnapshot(s: SparkSession, root: String,
       pred: Column, sets: Seq[(String, Column)],
       constraints: Seq[ColConstraint], mode: String = "auto"): Long =
-    retryingCommit(s, root, dmlGuard = true)(
-      updateWhereSnapshotAttempt(s, root, pred, sets, constraints, mode))
-
-  private def updateWhereSnapshotAttempt(s: SparkSession, root: String,
-      pred: Column, sets: Seq[(String, Column)],
-      constraints: Seq[ColConstraint], mode: String): Long = {
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = vs.last
-    val m = Manifest.read(s, root, v)
-    val cand = pruneFiles(s, m, constraints).toSet
-    val lines = m.entries
-    val (touched, untouched) = lines.partition(e => cand(e.path))
-    if (touched.isEmpty) return v
-    val keepStats = (m.statsColumns ++ m.headers.statsCols.getOrElse(Nil)).distinct
-    if (morChosen(s, mode, touched.size, lines.size)) {
-      // MERGE-ON-READ UPDATE = DV the old images + APPEND the new:
-      // write amplification is the MATCHED rows' bytes, not the
-      // touched files' — the point-update regime
-      val schema = m.headers.schema.getOrElse(
-        readSnapshotMerged(s, root, Some(v)).schema)
-      val live = readTouchedWithPos(s, root, m, touched)
-      val hits = live.filter(coalesce(pred, lit(false)))
-      if (hits.limit(1).count() == 0L) return v
-      val before = hits.drop("__graft_dv_f", "__graft_dv_p")
+    transact(s, root, dmlGuard = true) { head =>
+      val m = head.listing
+      val cand = pruneFiles(s, m, constraints).toSet
+      val (touched, untouched) = m.entries.partition(e => cand(e.path))
+      val stats = keptStats(m)
+      val hit = coalesce(pred, lit(false))
       val setFor = sets.map { case (c, e) => c.toLowerCase -> e }.toMap
-      val after = before.select(schema.fields.toIndexedSeq.map { f =>
-        setFor.get(f.name.toLowerCase) match {
-          case Some(value) => value.cast(f.dataType).as(f.name)
-          case None => col(f.name)
+      if (touched.isEmpty) Left(head.v)
+      else if (morChosen(s, mode, touched.size, m.entries.size)) {
+        // MERGE-ON-READ UPDATE = DV the old images + APPEND the new:
+        // write amplification is the MATCHED rows' bytes, not the
+        // touched files' — the point-update regime
+        val schema = m.headers.schema.getOrElse(
+          readLinesDv(s, root, m.entries, schema = None, merged = true).schema)
+        val hits = readTouchedWithPos(s, root, m, touched).filter(hit)
+        if (hits.limit(1).count() == 0L) Left(head.v)
+        else {
+          val before = hits.drop("__graft_dv_f", "__graft_dv_p")
+          val after = before.select(schema.fields.toIndexedSeq.map { f =>
+            setFor.get(f.name.toLowerCase) match {
+              case Some(value) => value.cast(f.dataType).as(f.name)
+              case None => col(f.name)
+            }
+          }: _*)
+          Right(Commit(after, untouched ++ touched, stats,
+            cdf = Some((after, before)),
+            dvNew = Some(dvRowsWith(s, root, touched, hits))))
         }
-      }: _*)
-      val dvRows = dvRowsOf(s, root, touched).unionByName(
-        hits.select(col("__graft_dv_f").as("f"),
-          col("__graft_dv_p").as("pos")))
-      return commitVersion(s, root, after,
-        parentLines = untouched ++ touched,
-        statsCol = Some(keepStats.mkString(",")).filter(_.nonEmpty),
-        tag = None, cdf = Some((after, before)), expectParent = Some(v),
-        dvNew = Some(dvRows))
-    }
-    // merged header schema — same rationale as deleteWhereSnapshot
-    val base = readTouched(s, root, m, touched)
-    // the match flag is evaluated on the OLD row image and carried
-    // through the projection — re-evaluating the predicate on
-    // updated values would mislabel rows whose SET changes the very
-    // column the WHERE tests
-    val hit = coalesce(pred, lit(false))
-    val setFor = sets.map { case (c, e) => c.toLowerCase -> e }.toMap
-    // the flag column's name must not collide with a table that
-    // already carries one — suffix until free (deterministic walk)
-    val hitCol = Iterator.from(0).map(i => s"__graft_hit$i")
-      .find(n => !base.columns.exists(_.equalsIgnoreCase(n))).get
-    val flagged = base.withColumn(hitCol, hit)
-    val rewritten = flagged.select((base.schema.fields.map { f =>
-      setFor.get(f.name.toLowerCase) match {
-        case Some(value) =>
-          when(col(hitCol), value.cast(f.dataType))
-            .otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
+      } else {
+        // merged header schema — same rationale as deleteWhereSnapshot
+        val base = readTouched(s, root, m, touched)
+        // the match flag is evaluated on the OLD row image and carried
+        // through the projection — re-evaluating the predicate on
+        // updated values would mislabel rows whose SET changes the very
+        // column the WHERE tests; its name must not collide with a
+        // table that already carries one — suffix until free
+        // (deterministic walk)
+        val hitCol = Iterator.from(0).map(i => s"__graft_hit$i")
+          .find(n => !base.columns.exists(_.equalsIgnoreCase(n))).get
+        val rewritten = base.withColumn(hitCol, hit).select((base.schema.fields.map { f =>
+          setFor.get(f.name.toLowerCase) match {
+            case Some(value) =>
+              when(col(hitCol), value.cast(f.dataType))
+                .otherwise(col(f.name)).as(f.name)
+            case None => col(f.name)
+          }
+        } :+ col(hitCol)).toIndexedSeq: _*)
+        val after = rewritten.filter(col(hitCol)).drop(hitCol)
+        Right(Commit(rewritten.drop(hitCol), untouched, stats,
+          cdf = Some((after, base.filter(hit)))))
       }
-    } :+ col(hitCol)).toIndexedSeq: _*)
-    val before = base.filter(hit)
-    val after = rewritten.filter(col(hitCol)).drop(hitCol)
-    commitVersion(s, root, rewritten.drop(hitCol),
-      parentLines = untouched,
-      statsCol = Some(keepStats.mkString(",")).filter(_.nonEmpty),
-      tag = None, cdf = Some((after, before)), expectParent = Some(v))
-  }
+    }.get
 
   /** COPY-ON-WRITE MERGE (upsert) as a snapshot version — the
     * Delta/Iceberg `MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT
@@ -2377,9 +2380,8 @@ object ScaleOps extends QueryModule {
   def mergeIntoSnapshot(s: SparkSession, root: String, keyCol: String,
       updates: DataFrame, tag: Option[String] = None,
       evolveSchema: Boolean = false, mode: String = "auto"): Long =
-    retryingCommit(s, root, dmlGuard = true)(
-      mergeIntoSnapshotAttempt(s, root, splitKeys(keyCol), updates, tag,
-        evolveSchema, mode))
+    transact(s, root, dmlGuard = true)(mergeCommit(s, root,
+      splitKeys(keyCol), updates, tag, evolveSchema, mode)).get
 
   /** `keyCol` may name a COMPOSITE key, comma-separated — every
     * member joins, plans and stats. */
@@ -2389,9 +2391,11 @@ object ScaleOps extends QueryModule {
     ks
   }
 
-  private def mergeIntoSnapshotAttempt(s: SparkSession, root: String,
+  /** The commit a MERGE lands on `head` — never a no-op: a batch that
+    * touches no file still appends its inserts. */
+  private def mergeCommit(s: SparkSession, root: String,
       keyCols: Seq[String], updates: DataFrame, tag: Option[String],
-      evolveSchema: Boolean, mode: String): Long = {
+      evolveSchema: Boolean, mode: String)(head: Head): Either[Long, Commit] = {
     // The duplicate-key check runs on the commit pool WHILE this
     // thread plans the touched files: both are fixed-cost Spark jobs
     // over the batch. Its refusal still wins — it is awaited before
@@ -2405,21 +2409,19 @@ object ScaleOps extends QueryModule {
           s"(${dup.getLong(0)} rows, ${dup.getLong(1)} distinct keys)")
     }
     val planned: Either[Throwable, Option[MergePlan]] =
-      try Right(planMerge(s, root, keyCols, updates, evolveSchema))
+      try Right(planMerge(s, root, head, keyCols, updates, evolveSchema))
       catch { case e: Throwable => Left(e) }
     firstFailure(Seq(dupCheck)).orElse(planned.left.toOption)
       .foreach(e => throw e)
-    val MergePlan(v, m, keepStats, anyBounds, touched, untouched) =
+    val MergePlan(m, keepStats, anyBounds, touched, untouched) =
       planned.toOption.get.getOrElse {
         // merging into an empty store bootstraps it: everything is an
         // insert, so v1 = the batch (the CREATE TABLE AS face of MERGE)
-        return commitVersion(s, root, updates, parentLines = Nil,
-          statsCol = Some(keyCols.mkString(",")), tag, expectParent = Some(0L))
+        return Right(Commit(updates, statsCols = keyCols, tag = tag))
       }
-    if (touched.isEmpty)
-      return commitVersion(s, root, updates, parentLines = untouched,
-        statsCol = if (anyBounds) Some(keepStats.mkString(",")) else None,
-        tag, cdf = Some((updates, updates.limit(0))), expectParent = Some(v))
+    val stats = if (anyBounds) keepStats else Nil
+    if (touched.isEmpty) return Right(Commit(updates, untouched, stats, tag,
+      cdf = Some((updates, updates.limit(0)))))
     if (morChosen(s, mode, touched.size, m.entries.size)) {
       // MERGE-ON-READ upsert — the CDC-sink write-amplification fix:
       // matched preimages become DV positions, the WHOLE batch lands
@@ -2431,15 +2433,9 @@ object ScaleOps extends QueryModule {
       val live = readTouchedWithPos(s, root, m, touched)
       val matchedRows = live.join(updates.select(keyCols.map(col): _*),
         keyCols, "left_semi")
-      val replaced = matchedRows.drop("__graft_dv_f", "__graft_dv_p")
-      val dvRows = dvRowsOf(s, root, touched).unionByName(
-        matchedRows.select(col("__graft_dv_f").as("f"),
-          col("__graft_dv_p").as("pos")))
-      return commitVersion(s, root, updates,
-        parentLines = untouched ++ touched,
-        statsCol = if (anyBounds) Some(keepStats.mkString(",")) else None,
-        tag, cdf = Some((updates, replaced)), expectParent = Some(v),
-        dvNew = Some(dvRows))
+      return Right(Commit(updates, untouched ++ touched, stats, tag,
+        cdf = Some((updates, matchedRows.drop("__graft_dv_f", "__graft_dv_p"))),
+        dvNew = Some(dvRowsWith(s, root, touched, matchedRows))))
     }
     // version's merged header schema: post-evolution, touched files
     // may disagree on columns among themselves — the header schema
@@ -2452,28 +2448,23 @@ object ScaleOps extends QueryModule {
     // replaced = touched-file rows whose key a batch row matches
     val replaced = base.join(updates.select(keyCols.map(col): _*),
       keyCols, "left_semi")
-    commitVersion(s, root,
-      survivors.unionByName(updates, allowMissingColumns = true),
-      parentLines = untouched,
-      statsCol = if (anyBounds) Some(keepStats.mkString(",")) else None,
-      tag, cdf = Some((updates, replaced)), expectParent = Some(v))
+    Right(Commit(survivors.unionByName(updates, allowMissingColumns = true),
+      untouched, stats, tag, cdf = Some((updates, replaced))))
   }
 
-  /** What [[mergeIntoSnapshotAttempt]] plans against the head `v`:
-    * its listing, the stats columns a rewrite keeps, whether any key
-    * carries zone maps, and the key-touched / untouched split. */
-  private case class MergePlan(v: Long, m: Manifest.Listing,
+  /** What [[mergeCommit]] plans against the head: its listing, the
+    * stats columns a rewrite keeps, whether any key carries zone maps,
+    * and the key-touched / untouched split. */
+  private case class MergePlan(m: Manifest.Listing,
       keepStats: Seq[String], anyBounds: Boolean,
       touched: Seq[ManifestEntry], untouched: Seq[ManifestEntry])
 
-  /** The planning half of [[mergeIntoSnapshotAttempt]]; None for an
-    * empty store. */
-  private def planMerge(s: SparkSession, root: String, keyCols: Seq[String],
-      updates: DataFrame, evolveSchema: Boolean): Option[MergePlan] = {
-    val vs = snapshotVersions(s, root)
-    if (vs.isEmpty) return None
-    val v = vs.last
-    val m = Manifest.read(s, root, v)
+  /** The planning half of [[mergeCommit]]; None for an empty store. */
+  private def planMerge(s: SparkSession, root: String, head: Head,
+      keyCols: Seq[String], updates: DataFrame,
+      evolveSchema: Boolean): Option[MergePlan] = {
+    if (head.v == 0L) return None
+    val m = head.listing
     // a rewrite keeps indexing every NAMED stats column the store
     // already carries (plus its own keys), so a multi-column store's
     // rewritten files don't silently lose their second zone map
@@ -2489,15 +2480,15 @@ object ScaleOps extends QueryModule {
     // the VERSION's merged one: its `#schema:` header, or for a
     // pre-header manifest the mergeSchema footer sweep — post-
     // evolution files legitimately disagree column-wise.
-    val storeCols = m.headers.schema.map(_.fieldNames.toSeq)
-      .getOrElse(readSnapshotMerged(s, root, Some(v)).columns.toSeq)
+    val storeCols = m.headers.schema.map(_.fieldNames.toSeq).getOrElse(
+      readLinesDv(s, root, m.entries, schema = None, merged = true).columns.toSeq)
     val newCols = updates.columns.toSet -- storeCols
     require(evolveSchema || newCols.isEmpty,
       s"merge batch carries columns the store lacks (${newCols.mkString(",")}); " +
         "pass evolveSchema=true to evolve, or project them away")
     val (touched, untouched) = keysTouchedLines(s, m, updates,
       keyCols.map(k => k -> k))
-    Some(MergePlan(v, m, keepStats, anyBounds, touched, untouched))
+    Some(MergePlan(m, keepStats, anyBounds, touched, untouched))
   }
 
   /** Batch-tagged IDEMPOTENT merge — [[snapshotAppendOnce]]'s
@@ -2513,12 +2504,9 @@ object ScaleOps extends QueryModule {
     * order-dependent answer. */
   def snapshotMergeOnce(s: SparkSession, root: String, keyCol: String,
       updates: DataFrame, tag: String): Option[Long] =
-    // retry wraps probe AND attempt (see snapshotAppendOnce)
-    retryingCommit(s, root, dmlGuard = true) {
-      if (lastCommittedTag(s, root).contains(tag)) None
-      else Some(mergeIntoSnapshotAttempt(s, root, splitKeys(keyCol),
-        updates, Some(tag), evolveSchema = false, mode = "auto"))
-    }
+    transact(s, root, dmlGuard = true, replayOf = Some(tag))(mergeCommit(s,
+      root, splitKeys(keyCol), updates, Some(tag), evolveSchema = false,
+      mode = "auto"))
 
   /** The MERGE planning metadata join shared by the canonical upsert
     * and the general SQL executor: a manifest line is TOUCHED iff it
@@ -2608,17 +2596,7 @@ object ScaleOps extends QueryModule {
       notMatched: Seq[GeneralMergeClause],
       bySource: Seq[GeneralMergeClause] = Nil,
       mode: String = "auto",
-      evolved: Option[StructType] = None): Long =
-    retryingCommit(s, root, dmlGuard = true)(
-      mergeGeneralSnapshotAttempt(s, root, keys, updates,
-        matched, notMatched, bySource, mode, evolved))
-
-  private def mergeGeneralSnapshotAttempt(s: SparkSession, root: String,
-      keys: Seq[(String, String)], updates: DataFrame,
-      matched: Seq[GeneralMergeClause],
-      notMatched: Seq[GeneralMergeClause],
-      bySource: Seq[GeneralMergeClause],
-      mode: String, evolved: Option[StructType]): Long = {
+      evolved: Option[StructType] = None): Long = {
     require(keys.nonEmpty, "general MERGE needs at least one key pair")
     val srcKeyCols = keys.map(_._2)
     val dup = updates.agg(count(lit(1)).as("n"),
@@ -2627,146 +2605,136 @@ object ScaleOps extends QueryModule {
     require(dup.getLong(0) == dup.getLong(1),
       s"merge source must have unique non-null '${srcKeyCols.mkString(",")}' " +
         s"keys (${dup.getLong(0)} rows, ${dup.getLong(1)} distinct keys)")
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root — " +
-      "CREATE the table (or publish v1) before a general MERGE")
-    val v = vs.last
-    val m = Manifest.read(s, root, v)
-    val keepStats = (m.statsColumns ++ keys.map(_._1)).distinct
-    val anyBounds = keys.exists(k => m.bounds(k._1).nonEmpty)
-    val headerSchema = m.headers.schema.getOrElse(
-      readSnapshotMerged(s, root, Some(v)).schema)
-    // EVOLVE-ON-MERGE for the general shapes: `evolved` appends the
-    // statement's NEW target columns (source columns the store
-    // lacks, star-expanded or analyzer-evolved) — rewritten/kept
-    // rows null-fill them, untouched files stay physically
-    // column-free, and the commit's merged `#schema:` header evolves
-    // the store exactly like the canonical upsert's path.
-    val schema = evolved.fold(headerSchema)(ev =>
-      mergeSchemas(headerSchema, allNullable(ev)))
-    // NOT MATCHED BY SOURCE clauses act on target rows whose key is
-    // ABSENT from the batch — which can live in ANY file, so the
-    // key-zone planning cannot bound the rewrite: every line is
-    // touched by construction ("make target mirror source" IS a full
-    // rewrite). Without such clauses the zone maps bound it as ever.
-    val (touched, untouched) =
-      if (bySource.nonEmpty) (m.entries, Seq.empty[ManifestEntry])
-      else keysTouchedLines(s, m, updates, keys)
-    // MERGE-ON-READ for the general shapes too (bySource excluded —
-    // its rewrite is every file by definition, so CoW IS the right
-    // materialization): fired-on target rows become DV positions,
-    // updated post-images and inserts append, ride-along rows stay
-    // in their files — the CDC envelope's per-trigger write drops to
-    // O(batch) exactly like the canonical upsert's.
-    val useMor = bySource.isEmpty && touched.nonEmpty &&
-      morChosen(s, mode, touched.size, m.entries.size)
-    val base =
-      if (touched.isEmpty)
-        s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          schema)
-      else if (useMor) readTouchedWithPos(s, root, m, touched)
-      else readTouched(s, root, m, touched)
-    val clash = (base.columns.filterNot(_.startsWith("__graft_dv_")) ++
-      updates.columns).filter(c =>
-      c.startsWith("__t_") || c.startsWith("__s_") || c == "__graft_act")
-    require(clash.isEmpty,
-      s"general MERGE reserves __t_/__s_/__graft_act column names; " +
-        s"rename: ${clash.mkString(", ")}")
-    // position columns (MoR) ride UNprefixed beside the __t_ images;
-    // evolved columns the touched files physically lack null-fill
-    // here so every routed output column has a target image to keep
-    val missing = schema.fields.toIndexedSeq.filterNot(f =>
-      base.columns.exists(_.equalsIgnoreCase(f.name)))
-    val t = base.select(base.columns.map(c =>
-      if (c.startsWith("__graft_dv_")) col(c)
-      else col(c).as(s"__t_$c")).toSeq ++
-      missing.map(f => lit(null).cast(f.dataType).as(s"__t_${f.name}")) :+
-      lit(true).as("__t_p"): _*)
-    val u = updates.select(
-      updates.columns.map(c => col(c).as(s"__s_$c")).toSeq :+
-        lit(true).as("__s_p"): _*)
-    val j = t.join(u, keys.map { case (tk, sk) =>
-        col(s"__t_$tk") === col(s"__s_$sk")
-      }.reduce(_ && _), "full_outer")
-    // Row routing: action codes — MATCHED update clause i → i, NOT
-    // MATCHED insert clause i → 1000+i, NOT MATCHED BY SOURCE update
-    // clause i → 2000+i, any DELETE → -2 (drop), no clause fires →
-    // -1 (matched/target-only rows KEEP; source-only rows DROP).
-    // when() treats a NULL clause condition as not firing, the WHERE
-    // contract.
-    def chainOf(cls: Seq[GeneralMergeClause], base: Int,
-        dflt: Column): Column =
-      cls.zipWithIndex.foldRight(dflt) { case ((cl, i), els) =>
-        val code = cl.kind match {
-          case "delete" => -2
-          case _ => base + i
+    transact(s, root, dmlGuard = true) { head =>
+      require(head.v >= 1L, s"no committed snapshots under $root — " +
+        "CREATE the table (or publish v1) before a general MERGE")
+      val m = head.listing
+      val keepStats = (m.statsColumns ++ keys.map(_._1)).distinct
+      val anyBounds = keys.exists(k => m.bounds(k._1).nonEmpty)
+      val headerSchema = m.headers.schema.getOrElse(
+        readLinesDv(s, root, m.entries, schema = None, merged = true).schema)
+      // EVOLVE-ON-MERGE for the general shapes: `evolved` appends the
+      // statement's NEW target columns (source columns the store
+      // lacks, star-expanded or analyzer-evolved) — rewritten/kept
+      // rows null-fill them, untouched files stay physically
+      // column-free, and the commit's merged `#schema:` header evolves
+      // the store exactly like the canonical upsert's path.
+      val schema = evolved.fold(headerSchema)(ev =>
+        mergeSchemas(headerSchema, allNullable(ev)))
+      // NOT MATCHED BY SOURCE clauses act on target rows whose key is
+      // ABSENT from the batch — which can live in ANY file, so the
+      // key-zone planning cannot bound the rewrite: every line is
+      // touched by construction ("make target mirror source" IS a full
+      // rewrite). Without such clauses the zone maps bound it as ever.
+      val (touched, untouched) =
+        if (bySource.nonEmpty) (m.entries, Seq.empty[ManifestEntry])
+        else keysTouchedLines(s, m, updates, keys)
+      // MERGE-ON-READ for the general shapes too (bySource excluded —
+      // its rewrite is every file by definition, so CoW IS the right
+      // materialization): fired-on target rows become DV positions,
+      // updated post-images and inserts append, ride-along rows stay
+      // in their files — the CDC envelope's per-trigger write drops to
+      // O(batch) exactly like the canonical upsert's.
+      val useMor = bySource.isEmpty && touched.nonEmpty &&
+        morChosen(s, mode, touched.size, m.entries.size)
+      val base =
+        if (touched.isEmpty)
+          s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+            schema)
+        else if (useMor) readTouchedWithPos(s, root, m, touched)
+        else readTouched(s, root, m, touched)
+      val clash = (base.columns.filterNot(_.startsWith("__graft_dv_")) ++
+        updates.columns).filter(c =>
+        c.startsWith("__t_") || c.startsWith("__s_") || c == "__graft_act")
+      require(clash.isEmpty,
+        s"general MERGE reserves __t_/__s_/__graft_act column names; " +
+          s"rename: ${clash.mkString(", ")}")
+      // position columns (MoR) ride UNprefixed beside the __t_ images;
+      // evolved columns the touched files physically lack null-fill
+      // here so every routed output column has a target image to keep
+      val missing = schema.fields.toIndexedSeq.filterNot(f =>
+        base.columns.exists(_.equalsIgnoreCase(f.name)))
+      val t = base.select(base.columns.map(c =>
+        if (c.startsWith("__graft_dv_")) col(c)
+        else col(c).as(s"__t_$c")).toSeq ++
+        missing.map(f => lit(null).cast(f.dataType).as(s"__t_${f.name}")) :+
+        lit(true).as("__t_p"): _*)
+      val u = updates.select(
+        updates.columns.map(c => col(c).as(s"__s_$c")).toSeq :+
+          lit(true).as("__s_p"): _*)
+      val j = t.join(u, keys.map { case (tk, sk) =>
+          col(s"__t_$tk") === col(s"__s_$sk")
+        }.reduce(_ && _), "full_outer")
+      // Row routing: action codes — MATCHED update clause i → i, NOT
+      // MATCHED insert clause i → 1000+i, NOT MATCHED BY SOURCE update
+      // clause i → 2000+i, any DELETE → -2 (drop), no clause fires →
+      // -1 (matched/target-only rows KEEP; source-only rows DROP).
+      // when() treats a NULL clause condition as not firing, the WHERE
+      // contract.
+      def chainOf(cls: Seq[GeneralMergeClause], base: Int,
+          dflt: Column): Column =
+        cls.zipWithIndex.foldRight(dflt) { case ((cl, i), els) =>
+          val code = cl.kind match {
+            case "delete" => -2
+            case _ => base + i
+          }
+          when(cl.condition.getOrElse(lit(true)), lit(code)).otherwise(els)
         }
-        when(cl.condition.getOrElse(lit(true)), lit(code)).otherwise(els)
+      val act = when(col("__t_p").isNotNull && col("__s_p").isNotNull,
+          chainOf(matched, 0, lit(-1)))
+        .when(col("__s_p").isNotNull, chainOf(notMatched, 1000, lit(-2)))
+        .otherwise(chainOf(bySource, 2000, lit(-1)))
+      val jA = j.withColumn("__graft_act", act)
+      val alive = jA.filter(col("__graft_act") =!= lit(-2))
+      def assignFor(cl: GeneralMergeClause,
+          f: StructField): Option[Column] =
+        cl.assigns.find(_._1.equalsIgnoreCase(f.name)).map(_._2)
+      val outCols = schema.fields.toIndexedSeq.map { f =>
+        val keep = col(s"__t_${f.name}")
+        val routed = (matched.zipWithIndex.collect {
+          case (cl, i) if cl.kind == "update" =>
+            i -> assignFor(cl, f).getOrElse(keep)
+        } ++ notMatched.zipWithIndex.map { case (cl, i) =>
+          (1000 + i) -> assignFor(cl, f)
+            .getOrElse(lit(null).cast(f.dataType))
+        } ++ bySource.zipWithIndex.collect {
+          case (cl, i) if cl.kind == "update" =>
+            (2000 + i) -> assignFor(cl, f).getOrElse(keep)
+        }).foldRight(keep: Column) { case ((code, value), els) =>
+          when(col("__graft_act") === lit(code), value).otherwise(els)
+        }
+        routed.cast(f.dataType).as(f.name)
       }
-    val act = when(col("__t_p").isNotNull && col("__s_p").isNotNull,
-        chainOf(matched, 0, lit(-1)))
-      .when(col("__s_p").isNotNull, chainOf(notMatched, 1000, lit(-2)))
-      .otherwise(chainOf(bySource, 2000, lit(-1)))
-    val jA = j.withColumn("__graft_act", act)
-    val alive = jA.filter(col("__graft_act") =!= lit(-2))
-    def assignFor(cl: GeneralMergeClause,
-        f: StructField): Option[Column] =
-      cl.assigns.find(_._1.equalsIgnoreCase(f.name)).map(_._2)
-    val outCols = schema.fields.toIndexedSeq.map { f =>
-      val keep = col(s"__t_${f.name}")
-      val routed = (matched.zipWithIndex.collect {
-        case (cl, i) if cl.kind == "update" =>
-          i -> assignFor(cl, f).getOrElse(keep)
-      } ++ notMatched.zipWithIndex.map { case (cl, i) =>
-        (1000 + i) -> assignFor(cl, f)
-          .getOrElse(lit(null).cast(f.dataType))
-      } ++ bySource.zipWithIndex.collect {
-        case (cl, i) if cl.kind == "update" =>
-          (2000 + i) -> assignFor(cl, f).getOrElse(keep)
-      }).foldRight(keep: Column) { case ((code, value), els) =>
-        when(col("__graft_act") === lit(code), value).otherwise(els)
-      }
-      routed.cast(f.dataType).as(f.name)
-    }
-    // MoR: only rows a clause REPLACED or CREATED are written (the
-    // update/insert post-images); keeps stay in their files. CoW:
-    // every surviving row of the touched files is rewritten.
-    val result =
-      if (useMor) alive.filter(col("__graft_act") >= lit(0))
+      // MoR: only rows a clause REPLACED or CREATED are written (the
+      // update/insert post-images); keeps stay in their files. CoW:
+      // every surviving row of the touched files is rewritten.
+      val result =
+        if (useMor) alive.filter(col("__graft_act") >= lit(0))
+          .select(outCols: _*)
+        else alive.select(outCols: _*)
+      // change feed: updated/deleted preimages out, updated postimages
+      // and inserts in (compaction-style empty sides when a clause
+      // family is absent)
+      val preCols = schema.fields.toIndexedSeq.map(f =>
+        col(s"__t_${f.name}").cast(f.dataType).as(f.name))
+      val updIdx = matched.zipWithIndex.collect {
+        case (cl, i) if cl.kind == "update" => i } ++
+        bySource.zipWithIndex.collect {
+          case (cl, i) if cl.kind == "update" => 2000 + i }
+      val deletedPre = jA.filter(col("__t_p").isNotNull &&
+          (col("__graft_act") === lit(-2) ||
+            col("__graft_act").isin(updIdx.map(Int.box): _*)))
+        .select(preCols: _*)
+      val insertedPost = alive.filter(col("__graft_act") >= lit(0))
         .select(outCols: _*)
-      else alive.select(outCols: _*)
-    // change feed: updated/deleted preimages out, updated postimages
-    // and inserts in (compaction-style empty sides when a clause
-    // family is absent)
-    val preCols = schema.fields.toIndexedSeq.map(f =>
-      col(s"__t_${f.name}").cast(f.dataType).as(f.name))
-    val updIdx = matched.zipWithIndex.collect {
-      case (cl, i) if cl.kind == "update" => i } ++
-      bySource.zipWithIndex.collect {
-        case (cl, i) if cl.kind == "update" => 2000 + i }
-    val deletedPre = jA.filter(col("__t_p").isNotNull &&
-        (col("__graft_act") === lit(-2) ||
-          col("__graft_act").isin(updIdx.map(Int.box): _*)))
-      .select(preCols: _*)
-    val insertedPost = alive.filter(col("__graft_act") >= lit(0))
-      .select(outCols: _*)
-    if (useMor) {
-      // every target row a clause FIRED on leaves its file via a DV
-      // position (updates move to new files, deletes just go)
-      val fired = jA.filter(col("__t_p").isNotNull &&
-        col("__graft_act") =!= lit(-1))
-      val dvRows = dvRowsOf(s, root, touched).unionByName(
-        fired.select(col("__graft_dv_f").as("f"),
-          col("__graft_dv_p").as("pos")))
-      commitVersion(s, root, result, parentLines = untouched ++ touched,
-        statsCol = if (anyBounds) Some(keepStats.mkString(",")) else None,
-        tag = None, cdf = Some((insertedPost, deletedPre)),
-        expectParent = Some(v), dvNew = Some(dvRows))
-    } else
-      commitVersion(s, root, result, parentLines = untouched,
-        statsCol = if (anyBounds) Some(keepStats.mkString(",")) else None,
-        tag = None, cdf = Some((insertedPost, deletedPre)),
-        expectParent = Some(v))
+      val c = Commit(result, untouched, if (anyBounds) keepStats else Nil,
+        cdf = Some((insertedPost, deletedPre)))
+      // MoR: every target row a clause FIRED on leaves its file via a
+      // DV position (updates move to new files, deletes just go)
+      Right(if (!useMor) c else c.copy(parentLines = untouched ++ touched,
+        dvNew = Some(dvRowsWith(s, root, touched, jA.filter(
+          col("__t_p").isNotNull && col("__graft_act") =!= lit(-1))))))
+    }.get
   }
 
   /** OPTIMIZE (small-file compaction) as a snapshot version: bin the
@@ -2788,59 +2756,48 @@ object ScaleOps extends QueryModule {
     * reference the old small files — vacuum reclaims them once the
     * pre-compaction versions expire. Returns the committed version. */
   def compactSnapshot(s: SparkSession, root: String, targetBytes: Long,
-      statsCol: Option[String] = None): Long =
-    retryingCommit(s, root, dmlGuard = true)(
-      compactSnapshotAttempt(s, root, targetBytes, statsCol))
-
-  private def compactSnapshotAttempt(s: SparkSession, root: String,
-      targetBytes: Long, statsCol: Option[String]): Long = {
+      statsCol: Option[String] = None): Long = {
     import org.apache.hadoop.fs.Path
     require(targetBytes > 0, "targetBytes must be positive")
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = vs.last
     val fs = fsOf(s, new Path(root))
-    val m = Manifest.read(s, root, v)
     // the `sz:` field when the line carries one, else one stat
     def len(e: ManifestEntry) =
       e.size.getOrElse(fs.getFileStatus(new Path(e.path)).getLen)
-    val (small, big) = m.entries.partition(len(_) < targetBytes / 2)
-    // DV'd right-sized files join the rewrite REGARDLESS of size:
-    // compaction is the standing MATERIALIZER for merge-on-read
-    // deletion vectors — the rewrite drops the DV'd rows physically,
-    // the new lines carry no dv field, and vacuum reclaims the dirs
-    // once the pre-compaction versions expire. Same cadence argument
-    // as the small-file tail: MoR writes cheap debt, compaction pays
-    // it down in bulk.
-    val (dvBig, cleanBig) = big.partition(_.dv.isDefined)
-    val rewrite = small ++ dvBig
-    if (small.size <= 1 && dvBig.isEmpty) return v
-    val totalSmall = rewrite.map(len).sum
-    val nOut = math.max(1L, (totalSmall + targetBytes - 1) / targetBytes).toInt
     // the clustering key is the FIRST declared column (a multi-column
     // caller range-clusters on the leading key); the commit keeps
     // indexing every named stats column the store already carries
     // plus everything the caller declared, so compacting a
     // multi-column store never drops its second zone map
-    val clusterKey = statsCol.flatMap(
-      _.split(',').map(_.trim).find(_.nonEmpty))
-    val src = readLinesDv(s, root, rewrite, schema = None, merged = false)
-    val packed = clusterKey match {
-      case Some(c) => src.repartitionByRange(nOut, col(c))
-      case None => src.coalesce(nOut)
-    }
-    val keepStats = (m.statsColumns ++
-      statsCol.toSeq.flatMap(_.split(',').map(_.trim)).filter(_.nonEmpty))
-      .distinct
-    // compaction changes no rows: an EMPTY committed feed, so
-    // incremental consumers fold nothing instead of recomputing
-    // (DV materialization keeps that contract — the dropped rows
-    // were already logically deleted by the DV commit's own feed)
-    commitVersion(s, root, packed, parentLines = cleanBig,
-      statsCol = if (keepStats.isEmpty) None
-        else Some(keepStats.mkString(",")),
-      tag = None,
-      cdf = Some((packed.limit(0), packed.limit(0))), expectParent = Some(v))
+    val declared = splitStats(statsCol)
+    transact(s, root, dmlGuard = true) { head =>
+      val m = head.listing
+      val (small, big) = m.entries.partition(len(_) < targetBytes / 2)
+      // DV'd right-sized files join the rewrite REGARDLESS of size:
+      // compaction is the standing MATERIALIZER for merge-on-read
+      // deletion vectors — the rewrite drops the DV'd rows physically,
+      // the new lines carry no dv field, and vacuum reclaims the dirs
+      // once the pre-compaction versions expire. Same cadence argument
+      // as the small-file tail: MoR writes cheap debt, compaction pays
+      // it down in bulk.
+      val (dvBig, cleanBig) = big.partition(_.dv.isDefined)
+      val rewrite = small ++ dvBig
+      if (small.size <= 1 && dvBig.isEmpty) Left(head.v)
+      else {
+        val nOut = math.max(1L,
+          (rewrite.map(len).sum + targetBytes - 1) / targetBytes).toInt
+        val src = readLinesDv(s, root, rewrite, schema = None, merged = false)
+        val packed = declared.headOption match {
+          case Some(c) => src.repartitionByRange(nOut, col(c))
+          case None => src.coalesce(nOut)
+        }
+        // compaction changes no rows: an EMPTY committed feed, so
+        // incremental consumers fold nothing instead of recomputing
+        // (DV materialization keeps that contract — the dropped rows
+        // were already logically deleted by the DV commit's own feed)
+        Right(Commit(packed, cleanBig, (m.statsColumns ++ declared).distinct,
+          cdf = Some((packed.limit(0), packed.limit(0)))))
+      }
+    }.get
   }
 
   /** Full-recompute counter: test instrumentation pinning that
@@ -3354,86 +3311,79 @@ object ScaleOps extends QueryModule {
     * 2-4 (Delta's guidance): each added dimension dilutes every
     * dimension's locality. */
   def zorderSnapshotK(s: SparkSession, root: String, cols: Seq[String],
-      files: Int, statsBloom: Boolean = false): Long =
-    retryingCommit(s, root, dmlGuard = true)(
-      zorderSnapshotKAttempt(s, root, cols, files, statsBloom))
-
-  private def zorderSnapshotKAttempt(s: SparkSession, root: String,
-      cols: Seq[String], files: Int, statsBloom: Boolean): Long = {
+      files: Int, statsBloom: Boolean = false): Long = {
     require(cols.size >= 2, s"z-order needs >= 2 columns, got $cols")
     require(cols.size <= 8, s"z-order over ${cols.size} columns has " +
       "no locality left; cluster on fewer keys")
     val bits = math.min(Z_BITS, 63 / cols.size)
-    val vs = snapshotVersions(s, root)
-    require(vs.nonEmpty, s"no committed snapshots under $root")
-    val v = vs.last
-    val df = readSnapshotMerged(s, root, Some(v))
-    // Each curve dimension maps through the SAME order-preserving
-    // stat-space encodings the manifest zone maps use (integral as
-    // itself, DATE → epoch days, TIMESTAMP → epoch micros, STRING →
-    // packed 8-byte UTF-8 prefix) — a bare cast-to-Long silently
-    // NULLed every string/date dimension, committing a clustering
-    // claim the layout didn't deliver. Unmappable types refuse
-    // loudly, the store's one degrade discipline.
-    def encoded(c: String): Column = {
-      val f = df.schema.fields.find(_.name.equalsIgnoreCase(c))
-        .getOrElse(throw new IllegalArgumentException(
-          s"z-order column '$c' is not in the store's schema"))
-      f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType =>
-          col(f.name).cast(LongType)
-        case DateType => unix_date(col(f.name)).cast(LongType)
-        case TimestampType => unix_micros(col(f.name))
-        case StringType => stringPrefix64Col(col(f.name))
-        case other => throw new UnsupportedOperationException(
-          s"z-order dimension '$c' (${other.simpleString}) has no " +
-            "order-preserving stat-space mapping — cluster on an " +
-            "integral/date/timestamp/string key instead")
-      }
-    }
-    // Dimensions are MIN-MAX SCALED into the curve's 2^bits buckets
-    // (one bounded agg row for all dimensions' encoded extrema): the
-    // old low-bits pmod wrapped any dimension whose values exceed
-    // 2^bits — and a string prefix64 ALWAYS does (its low bits are
-    // byte 8, constant zero for short strings). Scaling is resolution
-    // only, never correctness: zone maps are computed from the DATA.
-    val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(encoded(c)).as(s"__lo$i"), max(encoded(c)).as(s"__hi$i"))
-    }
-    val ext = df.agg(aggs.head, aggs.tail: _*).collect()(0) // bounded: one row
-    val dims = cols.indices.map(i => s"__zd$i")
-    val zed = cols.indices
-      .foldLeft(df) { (acc, i) =>
-        val (lo, hi) = (Option(ext.getAs[java.lang.Long](s"__lo$i")),
-          Option(ext.getAs[java.lang.Long](s"__hi$i")))
-        val scaled = (lo, hi) match {
-          case (Some(mn), Some(mx)) if mx > mn =>
-            // double arithmetic THROUGHOUT (the Long difference can
-            // overflow: string prefixes span nearly the full signed
-            // range): precision loss past 2^53 can shift a row one
-            // BUCKET, never a wrong answer (curve resolution). The
-            // quotient is < 2^bits by construction; clamp anyway so a
-            // rounding artifact can't escape the bucket domain.
-            least(lit((1L << bits) - 1L),
-              floor((encoded(cols(i)).cast(DoubleType) -
-                lit(mn.doubleValue)) *
-                lit((1L << bits).toDouble) /
-                lit((mx.doubleValue - mn.doubleValue) + 1.0))
-                .cast(LongType))
-          case _ => lit(0L) // constant or all-NULL dimension
+    transact(s, root, dmlGuard = true) { head =>
+      val df = readLinesDv(s, root, head.listing.entries, schema = None,
+        merged = true)
+      // Each curve dimension maps through the SAME order-preserving
+      // stat-space encodings the manifest zone maps use (integral as
+      // itself, DATE → epoch days, TIMESTAMP → epoch micros, STRING →
+      // packed 8-byte UTF-8 prefix) — a bare cast-to-Long silently
+      // NULLed every string/date dimension, committing a clustering
+      // claim the layout didn't deliver. Unmappable types refuse
+      // loudly, the store's one degrade discipline.
+      def encoded(c: String): Column = {
+        val f = df.schema.fields.find(_.name.equalsIgnoreCase(c))
+          .getOrElse(throw new IllegalArgumentException(
+            s"z-order column '$c' is not in the store's schema"))
+        f.dataType match {
+          case ByteType | ShortType | IntegerType | LongType =>
+            col(f.name).cast(LongType)
+          case DateType => unix_date(col(f.name)).cast(LongType)
+          case TimestampType => unix_micros(col(f.name))
+          case StringType => stringPrefix64Col(col(f.name))
+          case other => throw new UnsupportedOperationException(
+            s"z-order dimension '$c' (${other.simpleString}) has no " +
+              "order-preserving stat-space mapping — cluster on an " +
+              "integral/date/timestamp/string key instead")
         }
-        // NULLs cluster at the curve origin (a NULL dim would NULL
-        // the whole interleave and strand rows in one range bucket)
-        acc.withColumn(dims(i), coalesce(scaled, lit(0L)))
       }
-      .withColumn("__z", expr(zExprSqlK(dims, "div", bits)))
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop(dims :+ "__z": _*)
-    commitVersion(s, root, zed, parentLines = Nil,
-      statsCol = Some(cols.mkString(",")), tag = None,
-      statsBloom = statsBloom,
-      cdf = Some((zed.limit(0), zed.limit(0))), expectParent = Some(v))
+      // Dimensions are MIN-MAX SCALED into the curve's 2^bits buckets
+      // (one bounded agg row for all dimensions' encoded extrema): the
+      // old low-bits pmod wrapped any dimension whose values exceed
+      // 2^bits — and a string prefix64 ALWAYS does (its low bits are
+      // byte 8, constant zero for short strings). Scaling is resolution
+      // only, never correctness: zone maps are computed from the DATA.
+      val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
+        Seq(min(encoded(c)).as(s"__lo$i"), max(encoded(c)).as(s"__hi$i"))
+      }
+      val ext = df.agg(aggs.head, aggs.tail: _*).collect()(0) // bounded: one row
+      val dims = cols.indices.map(i => s"__zd$i")
+      val zed = cols.indices
+        .foldLeft(df) { (acc, i) =>
+          val (lo, hi) = (Option(ext.getAs[java.lang.Long](s"__lo$i")),
+            Option(ext.getAs[java.lang.Long](s"__hi$i")))
+          val scaled = (lo, hi) match {
+            case (Some(mn), Some(mx)) if mx > mn =>
+              // double arithmetic THROUGHOUT (the Long difference can
+              // overflow: string prefixes span nearly the full signed
+              // range): precision loss past 2^53 can shift a row one
+              // BUCKET, never a wrong answer (curve resolution). The
+              // quotient is < 2^bits by construction; clamp anyway so a
+              // rounding artifact can't escape the bucket domain.
+              least(lit((1L << bits) - 1L),
+                floor((encoded(cols(i)).cast(DoubleType) -
+                  lit(mn.doubleValue)) *
+                  lit((1L << bits).toDouble) /
+                  lit((mx.doubleValue - mn.doubleValue) + 1.0))
+                  .cast(LongType))
+            case _ => lit(0L) // constant or all-NULL dimension
+          }
+          // NULLs cluster at the curve origin (a NULL dim would NULL
+          // the whole interleave and strand rows in one range bucket)
+          acc.withColumn(dims(i), coalesce(scaled, lit(0L)))
+        }
+        .withColumn("__z", expr(zExprSqlK(dims, "div", bits)))
+        .repartitionByRange(files, col("__z"))
+        .sortWithinPartitions(col("__z"))
+        .drop(dims :+ "__z": _*)
+      Right(Commit(zed, statsCols = cols, statsBloom = statsBloom,
+        cdf = Some((zed.limit(0), zed.limit(0)))))
+    }.get
   }
 
   /** Build-once fixture for s20 (own store): v1 = the corpus

@@ -262,4 +262,38 @@ class SnapshotRaceSpec extends SparkSpec {
     }
     }
   }
+
+  test("a same-tag replay race commits once: appendOnce and mergeOnce pairs") {
+    val root = freshDir("replay")
+    fs(root).delete(new Path(root), true)
+    ScaleOps.publishSnapshot(spark, root,
+      docs((1L, "en", "one"), (2L, "de", "zwei")), statsCol = Some("doc_id"))
+    // Two replays of one tagged batch at once. Each writer's first data
+    // write waits for the other's, so both plan against the same head:
+    // one wins the slot, and the loser's retry must find the winner's
+    // tag and absorb the batch instead of committing it again.
+    def racePair(op: () => Option[Long]): Seq[Option[Long]] = {
+      val planned = new CountDownLatch(2)
+      ScaleOps.commitTaskHook = {
+        case "data" => planned.countDown(); planned.await(60, TimeUnit.SECONDS)
+        case _ => ()
+      }
+      val pool = Executors.newFixedThreadPool(2)
+      try Seq.fill(2)(pool.submit(() => op())).map(_.get(120, TimeUnit.SECONDS))
+      finally { ScaleOps.commitTaskHook = _ => (); pool.shutdown() }
+    }
+    val appended = racePair(() => ScaleOps.snapshotAppendOnce(spark, root,
+      docs((3L, "fr", "trois")), "batch:1"))
+    assert(appended.sorted === Seq(None, Some(2L)))
+    assert(ScaleOps.snapshotVersions(spark, root) === Seq(1L, 2L))
+    // the merge updates a stored key, so the winner's commit is a
+    // rewrite: the loser absorbs the replay rather than refusing it
+    val merged = racePair(() => ScaleOps.snapshotMergeOnce(spark, root,
+      "doc_id", docs((2L, "de", "zwei neu"), (4L, "zh", "si")), "batch:2"))
+    assert(merged.sorted === Seq(None, Some(3L)))
+    assert(ScaleOps.snapshotVersions(spark, root) === Seq(1L, 2L, 3L))
+    assert(ScaleOps.readSnapshot(spark, root).select("doc_id", "text")
+      .as[(Long, String)].collect().sorted.toSeq ===
+      Seq(1L -> "one", 2L -> "zwei neu", 3L -> "trois", 4L -> "si"))
+  }
 }

@@ -55,41 +55,42 @@ class SnapshotRetrySpec extends SparkSpec {
     // append loser: first attempt simulates losing to a concurrent
     // append (the interleaved commit lands, then the loss surfaces)
     var calls = 0
-    val got = ScaleOps.retryingCommit(spark, root, dmlGuard = false) {
+    val got = ScaleOps.transact(spark, root, dmlGuard = false) { head =>
       calls += 1
       if (calls == 1) {
         ScaleOps.appendSnapshot(spark, root,
           Seq((100L, "interleaved")).toDF("id", "s"), Some("id"))
-        throw new IllegalStateException("publish: lost the commit race for v2")
+        throw new ScaleOps.CommitConflict(2L)
       }
-      ScaleOps.appendSnapshot(spark, root,
-        Seq((101L, "mine")).toDF("id", "s"), Some("id"))
+      Right(ScaleOps.Commit(Seq((101L, "mine")).toDF("id", "s"),
+        parentLines = head.listing.entries, statsCols = Seq("id")))
     }
-    assert(calls === 2 && got === 3L)
+    assert(calls === 2 && got === Some(3L))
+    assert(ScaleOps.readSnapshot(spark, root).count() === 42L)
     // DML loser over an intervening APPEND: retried
     calls = 0
-    ScaleOps.retryingCommit(spark, root, dmlGuard = true) {
+    ScaleOps.transact(spark, root, dmlGuard = true) { head =>
       calls += 1
       if (calls == 1) {
         ScaleOps.appendSnapshot(spark, root,
           Seq((102L, "late")).toDF("id", "s"), Some("id"))
-        throw new IllegalStateException("publish: lost the commit race for v4")
+        throw new ScaleOps.CommitConflict(4L)
       }
-      0L
+      Left(head.v)
     }
     assert(calls === 2)
     // DML loser over an intervening REWRITE: refused loudly
     val e = intercept[IllegalStateException] {
-      ScaleOps.retryingCommit(spark, root, dmlGuard = true) {
+      ScaleOps.transact(spark, root, dmlGuard = true) { _ =>
         ScaleOps.deleteFromSnapshot(spark, root, "id", 0L, 5L) // rewrite hop
-        throw new IllegalStateException("publish: lost the commit race for v5")
+        throw new ScaleOps.CommitConflict(5L)
       }
     }
     assert(e.getMessage.contains("conflict"), e.getMessage)
     // non-race failures are never retried
     calls = 0
     intercept[IllegalArgumentException] {
-      ScaleOps.retryingCommit(spark, root, dmlGuard = false) {
+      ScaleOps.transact(spark, root, dmlGuard = false) { _ =>
         calls += 1
         throw new IllegalArgumentException("unrelated")
       }
