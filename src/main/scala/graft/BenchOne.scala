@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time a named subset of `SparkEntry.queries` without the
   * full Bench sweep — `runMain graft.BenchOne q1,q2 [warmupName]`.
   * Same session config and noop-sink materialization as [[Bench]];
@@ -14,23 +12,17 @@ object BenchOne {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val warmup = if (args.length > 1) args(1) else "a08_keyed_agg"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
     // Dev knob (round-15 scaling sweep): extra session confs as
     // comma-separated k=v pairs — e.g. maxPartitionBytes, so a
     // synthetic many-small-files corpus can expose operator scaling
     // instead of being capped by scan-split packing. NOT read by the
     // driver-contract Bench main.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(",")).map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        k -> v
+      }
+    val spark = Sessions.local(Sessions.cpus(32), extra)
     spark.sparkContext.setLogLevel("ERROR")
     def t(n: String): Double = {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: executes selected queries at the given SF and
   * prints the FINAL (post-AQE) physical plan, plus a one-line summary
   * of the facts that matter at scale — join strategies chosen, scan
@@ -13,14 +11,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus(8))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

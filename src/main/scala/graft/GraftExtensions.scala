@@ -6,12 +6,27 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** Engine extension entry point: register with
-  * `spark.sql.extensions=graft.GraftExtensions` (Verify/Bench/tests
-  * do). Currently injects the dictionary tokenizer UDTF
-  * (`graft_tokenize`, SURVEY.md §2 A24) as a native Generator so SQL
-  * and DataFrame queries can LATERAL-expand tokens without a UDF. */
+  * `spark.sql.extensions=graft.GraftExtensions`. `Sessions.local` does,
+  * so every graft main and the tests load it; so does the benchmark's
+  * own session. It injects
+  *  - two resolution rules: SQL MERGE INTO on snapshot-catalog tables
+  *    and the deletion-vector-aware read;
+  *  - 33 functions (`graft_*`): native tokenizers, hashing and vector
+  *    kernels, and Spark's Bloom-filter aggregate and probe;
+  *  - and, first, a larger bound for Spark's generated-class cache
+  *    (`spark.sql.codegen.cache.maxEntries` = 1,000 instead of 100,
+  *    `SqlShims.sizeActiveCodegenCache`), so a repeated dashboard
+  *    refresh reuses its compiled classes instead of recompiling them.
+  *
+  * An explicit `spark.sql.codegen.cache.maxEntries` (builder, `--conf`
+  * or defaults file) wins. The bound is static and read once per JVM:
+  * if a session without this extension already compiled code in the
+  * same JVM, the sizing has no effect. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // runs after the context exists and before the session copies its
+    // static confs (SparkSession.Builder.getOrCreate → applyExtensions)
+    org.apache.spark.sql.graft.SqlShims.sizeActiveCodegenCache()
     // SQL MERGE INTO on snapshot-catalog tables → the engine's own
     // zone-map-planned copy-on-write upsert (plans.ResolveSnapshotMerge)
     ext.injectResolutionRule(session => plans.ResolveSnapshotMerge(session))

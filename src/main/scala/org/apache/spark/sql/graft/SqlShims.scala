@@ -3,13 +3,34 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset => ClassicDataset}
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** The Spark-internal accesses the snapshot streaming connector
-  * needs, isolated here (this file lives inside the
-  * org.apache.spark.sql package tree solely to satisfy
-  * `private[sql]`); every other graft/Spark interaction uses the
-  * public API. All three are the standard v1-connector/DML-command
-  * shims Delta's connector uses for exactly the same jobs. */
+/** The Spark-internal accesses graft needs, isolated here (this file
+  * lives inside the org.apache.spark.sql package tree solely to
+  * satisfy `private[sql]` and `private[spark]`); every other
+  * graft/Spark interaction uses the public API. The connector ones are
+  * the standard v1-connector/DML-command shims Delta's connector uses
+  * for exactly the same jobs. */
 object SqlShims {
+
+  /** Entries graft gives Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Guava splits
+    * the bound over 4 segments and evicts per segment, so at 100 the
+    * dashboard's 94 classes per b1–b8 refresh evict each other and
+    * every refresh recompiles about a third of them. */
+  private val CodegenCacheEntries = 1000
+
+  /** Sets the codegen cache bound in `conf` unless it is already set. */
+  def sizeCodegenCache(conf: org.apache.spark.SparkConf): Unit =
+    conf.setIfMissing(
+      org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      CodegenCacheEntries.toString)
+
+  /** [[sizeCodegenCache]] on the active SparkContext's own conf (its
+    * `conf` is `private[spark]`). The bound is a static conf: it counts
+    * only when set before the context's first session copies the
+    * static confs and before `CodeGenerator` first loads, which reads
+    * it once per JVM. */
+  def sizeActiveCodegenCache(): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(sc => sizeCodegenCache(sc.conf))
 
   /** Re-root `df`'s physical plan under a streaming-flagged logical
     * leaf with the SAME schema — the micro-batch planner requires

@@ -1,13 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-contract smoke: entry() must return rows > 0 at sf0.001. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
