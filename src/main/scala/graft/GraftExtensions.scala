@@ -28,7 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // static confs (SparkSession.Builder.getOrCreate → applyExtensions)
     org.apache.spark.sql.graft.SqlShims.sizeActiveCodegenCache()
     // SQL MERGE INTO on snapshot-catalog tables → the engine's own
-    // zone-map-planned copy-on-write upsert (plans.ResolveSnapshotMerge)
+    // zone-map-planned row-level upsert (plans.ResolveSnapshotMerge)
     ext.injectResolutionRule(session => plans.ResolveSnapshotMerge(session))
     // reads of versions carrying merge-on-read deletion vectors →
     // the DV-aware composed read (plans.ResolveSnapshotDvRead)

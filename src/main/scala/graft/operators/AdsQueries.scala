@@ -400,8 +400,8 @@ object AdsQueries extends QueryModule {
     // lazy-checkpoint LogicalRDDs carry no size stats, so without the
     // hint the choice is AQE's runtime conversion; the hint makes it
     // static (no planned SMJ exchanges to convert, no reliance on
-    // stage-size detection). Measured at sf0.1 (ScaleProbe): the
-    // whole 3-round loop shuffles ~KBs — the per-round contrib
+    // stage-size detection). Measured at sf0.1 (BASELINE.md, "Scale
+    // probe: sf0.01 → sf0.1"): the whole 3-round loop shuffles ~KBs — the per-round contrib
     // aggregation's exchange carries node-grain bytes after map-side
     // partials. The round-15 VERDICT's suggested pre-hash-partition
     // of eo by dst was implemented and MEASURED WORSE: it adds one

@@ -285,11 +285,16 @@ object ScaleOps extends QueryModule {
     * at-least-once replay → A re-appends, silently duplicating).
     * Fan-in topologies must tag with per-writer prefixes AND probe
     * per-writer ([[committedTags]]), or give each stream its own
-    * store — exactly Delta's one-`txnAppId`-per-writer rule. */
+    * store — exactly Delta's one-`txnAppId`-per-writer rule.
+    *
+    * The head's own tag comes from `head`'s headers, which the plan
+    * reads anyway: a tagged commit opens its head manifest once. */
   private def lastCommittedTag(s: SparkSession, root: String,
-      versions: Seq[Long]): Option[String] =
-    versions.reverseIterator
-      .map(v => manifestTag(s, root, v))
+      head: Head): Option[String] =
+    (head.versions.lastOption.iterator.map { _ =>
+      tagProbes.incrementAndGet()
+      head.headers.tag
+    } ++ head.versions.reverseIterator.drop(1).map(v => manifestTag(s, root, v)))
       .collectFirst { case Some(t) => t }
 
   /** Tags of all COMMITTED versions, in version order — an O(versions)
@@ -299,7 +304,8 @@ object ScaleOps extends QueryModule {
     snapshotVersions(s, root).flatMap(v => manifestTag(s, root, v))
 
   /** Tag-probe counter: test instrumentation pinning that streaming
-    * ingest reads O(1) manifest headers per batch (SnapshotIngestSpec). */
+    * ingest reads O(1) manifest headers per batch (SnapshotIngestSpec).
+    * The replay probe's look at the head's headers counts as one. */
   private[graft] val tagProbes = new java.util.concurrent.atomic.AtomicLong
 
   /** A committed version's batch tag, read from the manifest's first
@@ -586,11 +592,12 @@ object ScaleOps extends QueryModule {
     * entry per new part file with its size and, per stats column, its
     * zone-map bounds (and Bloom when `statsBloom`).
     *
-    * `writeData = false` callers skip this: a METADATA-ONLY commit
-    * (the pure MoR delete: new lines are re-pointed parent lines, no
-    * data moves). Spark deliberately writes one schema-carrying part
-    * file even for an empty frame, so "write an empty df" is NOT a
-    * no-op — it would add one stray empty file per point delete. */
+    * `writeData = false` commits skip this: METADATA-ONLY (a
+    * merge-on-read DML that adds no rows, i.e. a delete: new lines are
+    * re-pointed parent lines, no data moves). Spark deliberately
+    * writes one schema-carrying part file even for an empty frame, so
+    * "write an empty df" is NOT a no-op — it would add one stray empty
+    * file per point delete. */
   private def writeDataFiles(s: SparkSession, df: DataFrame,
       tmpData: org.apache.hadoop.fs.Path, dataDir: org.apache.hadoop.fs.Path,
       next: Long, statsColumns: Seq[String],
@@ -788,7 +795,10 @@ object ScaleOps extends QueryModule {
     var attempt = 0
     while (true) {
       val head = new Head(s, root, snapshotVersions(s, root))
-      if (replayOf.exists(lastCommittedTag(s, root, head.versions).contains))
+      // a DML plans against the head's listing: resolving it first
+      // gives the replay probe its headers without a second open
+      if (replayOf.isDefined && dmlGuard && head.v >= 1L) head.listing
+      if (replayOf.exists(lastCommittedTag(s, root, head).contains))
         return None
       for ((before, e) <- lost if dmlGuard) {
         val intervening = head.versions.filter(_ > before)
@@ -1224,29 +1234,35 @@ object ScaleOps extends QueryModule {
     * (metadata-driven join strategy, no stats estimation roulette).
     * `schema` (the version's merged header schema) null-fills evolved
     * columns; without it `merged` selects plain vs mergeSchema
-    * footer resolution, preserving each caller's historic contract. */
+    * footer resolution, preserving each caller's historic contract.
+    * With `positions` every row keeps its `__graft_dv_f`/`__graft_dv_p`
+    * (file, row index) columns, which a merge-on-read write turns into
+    * the next deletion vector. */
   private[graft] def readLinesDv(s: SparkSession, root: String,
       lines: Seq[ManifestEntry], schema: Option[StructType],
-      merged: Boolean): DataFrame = {
+      merged: Boolean, positions: Boolean = false): DataFrame = {
     def rd(files: Seq[String]): DataFrame = schema match {
       case Some(sc) => s.read.schema(sc).parquet(files: _*)
       case None if merged =>
         s.read.option("mergeSchema", "true").parquet(files: _*)
       case None => Tables.readParquet(s, files: _*)
     }
+    def withPos(df: DataFrame): DataFrame = df
+      .withColumn("__graft_dv_f", col("_metadata.file_path"))
+      .withColumn("__graft_dv_p", col("_metadata.row_index"))
+    def rdPos(files: Seq[String]): DataFrame =
+      if (positions) withPos(rd(files)) else rd(files)
     val (dvd, clean) = lines.partition(_.dv.isDefined)
-    if (dvd.isEmpty) rd(clean.map(_.path))
+    if (dvd.isEmpty) rdPos(clean.map(_.path))
     else {
       val delDf = dvRowsOf(s, root, dvd)
         .select(col("f").as("__graft_dv_f"), col("pos").as("__graft_dv_p"))
       val del = if (dvSideBroadcastable(dvd)) broadcast(delDf) else delDf
-      val masked = rd(dvd.map(_.path))
-        .withColumn("__graft_dv_f", col("_metadata.file_path"))
-        .withColumn("__graft_dv_p", col("_metadata.row_index"))
+      val joined = withPos(rd(dvd.map(_.path)))
         .join(del, Seq("__graft_dv_f", "__graft_dv_p"), "left_anti")
-        .drop("__graft_dv_f", "__graft_dv_p")
+      val masked = if (positions) joined else joined.drop("__graft_dv_f", "__graft_dv_p")
       if (clean.isEmpty) masked
-      else masked.unionByName(rd(clean.map(_.path)), allowMissingColumns = true)
+      else masked.unionByName(rdPos(clean.map(_.path)), allowMissingColumns = true)
     }
   }
 
@@ -2115,20 +2131,6 @@ object ScaleOps extends QueryModule {
     }
   }
 
-  /** The ONE read doorway for DML rewrites (delete/update/merge
-    * touched-file reads): the named manifest lines' files, read under
-    * the VERSION's merged header schema — on a schema-evolved store a
-    * footer-inferred schema over the touched SUBSET can lack a column
-    * other files carry, and a rewrite through it would silently drop
-    * those values (reads null-fill afterwards). Pre-header stores pay
-    * the one mergeSchema footer sweep over the touched files only. */
-  private def readTouched(s: SparkSession, root: String, m: Manifest.Listing,
-      lines: Seq[ManifestEntry]): DataFrame =
-    // DV-aware: a rewrite that read a DV'd file raw would resurrect
-    // its deleted rows INTO the rewrite — the one way a committed
-    // delete could silently un-happen
-    readLinesDv(s, root, lines, m.headers.schema, merged = true)
-
   /** COPY-ON-WRITE row-level DELETE: commit a new version whose
     * content is the latest version's minus rows with `colName` in
     * `[lo, hi]`, rewriting ONLY the files whose zone-map interval
@@ -2162,33 +2164,8 @@ object ScaleOps extends QueryModule {
       Seq(ColConstraint(colName, Some(lo), Some(hi), None)), mode = "cow",
       alsoStats = Seq(colName))).get
 
-  /** COPY-ON-WRITE DELETE for an ARBITRARY row-level predicate — the
-    * engine face behind SQL `DELETE FROM cat.t WHERE …`
-    * (SupportsDelete on the DSv2 table). Same discipline as
-    * [[deleteFromSnapshot]]: `constraints` — the pushed filters
-    * mapped into stat space by the connector, exactly what a pruned
-    * READ would derive — pick the candidate files through
-    * [[pruneFiles]]; every provably predicate-free file's
-    * manifest line (stats, Blooms and all) carries forward verbatim,
-    * its data never read. `pred` evaluates with SQL three-valued
-    * logic: only rows where it is TRUE are deleted (NULL keeps — the
-    * WHERE-clause contract; the zone planning is a SUPERSET of the
-    * TRUE rows by construction, so the two layers can never
-    * disagree). Rewritten files re-stat every named stats column the
-    * store carries plus its declared header columns; the commit
-    * lands with a change feed of the dropped rows. Returns the
-    * committed version (or the current one when no file can hold a
-    * match — a no-op needs no commit). */
-  /** MoR policy gate: `mor` forces merge-on-read, `cow` forces the
-    * rewrite, `auto` (the SQL default) picks merge-on-read when the
-    * touched-file FRACTION is at most
-    * `spark.graft.snapshot.morMaxTouchedFraction` (default 0.2) —
-    * the regime where rewriting whole files to drop a few rows is
-    * pure write amplification (the round-12 CDC-sink scale-killer: a
-    * 1,000-key micro-batch spread over 1,000 files of a 100 TB store
-    * rewrote ~1,000 files per trigger, forever). A broad delete
-    * keeps the copy-on-write path: its rewrite IS the materialization
-    * and leaves no read-side debt. */
+  /** MoR policy gate of [[rowLevelCommit]], which states the rule:
+    * `mor`, `cow`, or `auto` by the touched-file fraction. */
   private def morChosen(s: SparkSession, mode: String,
       touched: Int, total: Int): Boolean = mode match {
     case "mor" => true
@@ -2201,29 +2178,87 @@ object ScaleOps extends QueryModule {
       s"snapshot DML mode must be auto|cow|mor, got '$other'")
   }
 
-  /** The touched files' LIVE rows (existing deletion vectors already
-    * anti-joined out) with `__graft_dv_f`/`__graft_dv_p` position
-    * columns attached — the MoR write paths' shared read: new DV
-    * positions come from these columns, preimages from the rows. */
-  private def readTouchedWithPos(s: SparkSession, root: String,
-      m: Manifest.Listing, lines: Seq[ManifestEntry]): DataFrame = {
-    val files = lines.map(_.path)
-    val raw = (m.headers.schema match {
-      case Some(sc) => s.read.schema(sc)
-      case None => s.read.option("mergeSchema", "true")
-    }).parquet(files: _*)
-      .withColumn("__graft_dv_f", col("_metadata.file_path"))
-      .withColumn("__graft_dv_p", col("_metadata.row_index"))
-    val oldDf = dvRowsOf(s, root, lines)
-      .select(col("f").as("__graft_dv_f"), col("pos").as("__graft_dv_p"))
-    // manifest-known DV byte size decides the join strategy, the
-    // same metadata-driven broadcast as readLinesDv
-    val old = if (dvSideBroadcastable(lines)) broadcast(oldDf) else oldDf
-    raw.join(old, Seq("__graft_dv_f", "__graft_dv_p"), "left_anti")
+  /** What a row-level DML does to the live rows of the files it
+    * touches: `hit` rows leave, the other rows stay, and `added` rows
+    * arrive (post-images and inserts; None when the op adds none).
+    * `rewritten` is the staying rows plus the added rows — the files'
+    * new content under copy-on-write, computed in one pass where the
+    * op can. The frames are lazy views of one read: [[rowLevelCommit]]
+    * runs only the ones its mode needs. */
+  private final case class RowChange(hit: DataFrame, added: Option[DataFrame],
+      rewritten: DataFrame)
+
+  /** THE write path of every row-level DML — DELETE, UPDATE, MERGE and
+    * the general MERGE: read the `touched` lines' live rows once, let
+    * the op's `change` split them, and commit on top of `head` with
+    * every `untouched` line carried forward verbatim. The change feed
+    * is always (added, hit).
+    *
+    * MERGE-ON-READ or COPY-ON-WRITE is decided here and nowhere else:
+    * `mode` `mor` forces merge-on-read, `cow` forces copy-on-write, and
+    * `auto` (the SQL default) picks merge-on-read when the touched
+    * files are at most `spark.graft.snapshot.morMaxTouchedFraction`
+    * (default 0.2) of the version's files.
+    *  - Merge-on-read reads the rows with their (file, position)
+    *    columns, lands the hit positions as the touched lines' next
+    *    deletion vector, and appends the added rows; no touched file
+    *    is rewritten. A write costs the batch, not the touched files —
+    *    the point-delete and CDC-upsert regime, where rewriting whole
+    *    files to drop a few rows is pure write amplification (the
+    *    round-12 CDC-sink finding: a 1,000-key micro-batch over 1,000
+    *    files rewrote ~1,000 files per trigger). Reads anti-join the
+    *    positions out; [[compactSnapshot]] materializes them away.
+    *  - Copy-on-write rewrites the touched files as the staying rows
+    *    plus the added rows (`rewritten`). The rewrite IS the
+    *    materialization and leaves no read-side debt — the
+    *    broad-statement regime.
+    *
+    * The rows are read under the version's merged header schema (on a
+    * schema-evolved store a footer schema over the touched SUBSET can
+    * lack a column other files carry, and the rewrite would silently
+    * drop those values) and DV-aware (a rewrite that read a DV'd file
+    * raw would resurrect its deleted rows). No touched line means
+    * copy-on-write over an empty frame of the store's schema.
+    *
+    * No-ops: with `skipIfNoHit` (DELETE, UPDATE) a merge-on-read op
+    * that hits no row commits nothing, while copy-on-write commits its
+    * rewrite regardless. A merge-on-read op that adds no rows writes no
+    * data file: its commit is metadata only. */
+  private def rowLevelCommit(s: SparkSession, root: String, head: Head,
+      touched: Seq[ManifestEntry], untouched: Seq[ManifestEntry],
+      mode: String, stats: Seq[String], tag: Option[String] = None,
+      skipIfNoHit: Boolean = false)(
+      change: DataFrame => RowChange): Either[Long, Commit] = {
+    val m = head.listing
+    val mor = touched.nonEmpty && morChosen(s, mode, touched.size, m.entries.size)
+    val live =
+      if (touched.isEmpty) s.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), storeSchema(s, root, m))
+      else readLinesDv(s, root, touched, m.headers.schema, merged = true,
+        positions = mor)
+    val RowChange(hit, added, rewritten) = change(live)
+    if (!mor) Right(Commit(rewritten, untouched, stats, tag,
+      cdf = Some((added.getOrElse(rewritten.limit(0)), hit))))
+    else if (skipIfNoHit && hit.limit(1).count() == 0L) Left(head.v)
+    else {
+      val hitRows = hit.drop("__graft_dv_f", "__graft_dv_p")
+      val addedRows = added.getOrElse(hitRows.limit(0))
+      Right(Commit(addedRows, untouched ++ touched,
+        if (added.isDefined) stats else Nil, tag, cdf = Some((addedRows, hitRows)),
+        dvNew = Some(dvRowsWith(s, root, touched, hit)),
+        writeData = added.isDefined))
+    }
   }
 
+  /** The version's merged schema: its `#schema:` header, or for a
+    * pre-header manifest one mergeSchema footer sweep over its files. */
+  private def storeSchema(s: SparkSession, root: String,
+      m: Manifest.Listing): StructType =
+    m.headers.schema.getOrElse(
+      readLinesDv(s, root, m.entries, schema = None, merged = true).schema)
+
   /** The cumulative deletion vector of `touched` once `hits` — rows
-    * of [[readTouchedWithPos]] — are deleted too: the lines' current
+    * read with positions — are deleted too: the lines' current
     * (f, pos) rows plus the hits' positions. */
   private def dvRowsWith(s: SparkSession, root: String,
       touched: Seq[ManifestEntry], hits: DataFrame): DataFrame =
@@ -2235,6 +2270,24 @@ object ScaleOps extends QueryModule {
   private def keptStats(m: Manifest.Listing): Seq[String] =
     (m.statsColumns ++ m.headers.statsCols.getOrElse(Nil)).distinct
 
+  /** Row-level DELETE for an ARBITRARY predicate — the engine face
+    * behind SQL `DELETE FROM cat.t WHERE …` (SupportsDelete on the
+    * DSv2 table), written merge-on-read or copy-on-write by
+    * [[rowLevelCommit]]'s rule. Same planning as
+    * [[deleteFromSnapshot]]: `constraints` — the pushed filters
+    * mapped into stat space by the connector, exactly what a pruned
+    * READ would derive — pick the candidate files through
+    * [[pruneFiles]]; every provably predicate-free file's manifest
+    * line (stats, Blooms and all) carries forward verbatim, its data
+    * never read. `pred` evaluates with SQL three-valued logic: only
+    * rows where it is TRUE are deleted (NULL keeps — the WHERE-clause
+    * contract; the zone planning is a SUPERSET of the TRUE rows by
+    * construction, so the two layers can never disagree). Rewritten
+    * files re-stat every named stats column the store carries plus
+    * its declared header columns; the commit lands with a change feed
+    * of the dropped rows. Returns the committed version, or the
+    * current one when no file can hold a match or a merge-on-read
+    * delete matches no row — a no-op needs no commit. */
   private[graft] def deleteWhereSnapshot(s: SparkSession, root: String,
       pred: Column, constraints: Seq[ColConstraint],
       mode: String = "auto"): Long =
@@ -2250,41 +2303,22 @@ object ScaleOps extends QueryModule {
     val (touched, untouched) = m.entries.partition(e => cand(e.path))
     if (touched.isEmpty) return Left(head.v)
     val hit = coalesce(pred, lit(false))
-    if (morChosen(s, mode, touched.size, m.entries.size)) {
-      // MERGE-ON-READ: the deleted rows' (file, position) pairs land
-      // as a deletion vector; NO data file is written or rewritten —
-      // a point delete costs one tiny parquet dir plus a manifest,
-      // whatever the store size. Reads anti-join the positions out;
-      // compaction materializes them away on its own cadence.
-      val hits = readTouchedWithPos(s, root, m, touched).filter(hit)
-      if (hits.limit(1).count() == 0L) return Left(head.v) // nothing matched
-      val dropped = hits.drop("__graft_dv_f", "__graft_dv_p")
-      return Right(Commit(dropped.limit(0), parentLines = untouched ++ touched,
-        cdf = Some((dropped.limit(0), dropped)),
-        dvNew = Some(dvRowsWith(s, root, touched, hits)), writeData = false))
-    }
-    // read with the VERSION's merged header schema: on a schema-
-    // evolved store the touched subset's footer-inferred schema can
-    // lack a column some OTHER touched file carries — a bare
-    // s.read.parquet would silently drop those values from the
-    // rewrite (mergeIntoSnapshot's mergeSchema rationale, applied to
-    // every DML rewrite read)
-    val base = readTouched(s, root, m, touched)
-    val kept = base.filter(!hit)
-    Right(Commit(kept, untouched, (keptStats(m) ++ alsoStats).distinct,
-      cdf = Some((kept.limit(0), base.filter(hit)))))
+    rowLevelCommit(s, root, head, touched, untouched, mode,
+      (keptStats(m) ++ alsoStats).distinct, skipIfNoHit = true)(live =>
+      RowChange(live.filter(hit), added = None, live.filter(!hit)))
   }
 
-  /** COPY-ON-WRITE UPDATE for an ARBITRARY row-level predicate — the
-    * engine face behind SQL `UPDATE cat.t SET … WHERE …`. The exact
-    * [[deleteWhereSnapshot]] discipline (constraints prune candidate
-    * files, untouched lines carry forward verbatim, three-valued
-    * predicate, change feed of before/after images), with the
-    * rewrite REPLACING matching rows by their SET projection instead
-    * of dropping them: each assigned column becomes
-    * `when(pred, value).otherwise(col)` cast back to its own type,
-    * so non-matching rows are bit-identical ride-alongs. Returns the
-    * committed version (current one when no file can hold a match). */
+  /** Row-level UPDATE for an ARBITRARY predicate — the engine face
+    * behind SQL `UPDATE cat.t SET … WHERE …`, written by
+    * [[rowLevelCommit]]. The [[deleteWhereSnapshot]] planning and
+    * no-op rules, with the hit rows REPLACED by their SET projection
+    * instead of dropped: each assigned column becomes
+    * `when(pred, value).otherwise(col)` cast back to its own type, so
+    * non-matching rows are bit-identical ride-alongs. The predicate is
+    * evaluated on each row's OLD image, for the post-images too, so a
+    * SET that changes the very column the WHERE tests never mislabels
+    * a row. The change feed carries the before/after images.
+    * Returns the committed version (the current one for a no-op). */
   private[graft] def updateWhereSnapshot(s: SparkSession, root: String,
       pred: Column, sets: Seq[(String, Column)],
       constraints: Seq[ColConstraint], mode: String = "auto"): Long =
@@ -2292,61 +2326,26 @@ object ScaleOps extends QueryModule {
       val m = head.listing
       val cand = pruneFiles(s, m, constraints).toSet
       val (touched, untouched) = m.entries.partition(e => cand(e.path))
-      val stats = keptStats(m)
       val hit = coalesce(pred, lit(false))
       val setFor = sets.map { case (c, e) => c.toLowerCase -> e }.toMap
       if (touched.isEmpty) Left(head.v)
-      else if (morChosen(s, mode, touched.size, m.entries.size)) {
-        // MERGE-ON-READ UPDATE = DV the old images + APPEND the new:
-        // write amplification is the MATCHED rows' bytes, not the
-        // touched files' — the point-update regime
-        val schema = m.headers.schema.getOrElse(
-          readLinesDv(s, root, m.entries, schema = None, merged = true).schema)
-        val hits = readTouchedWithPos(s, root, m, touched).filter(hit)
-        if (hits.limit(1).count() == 0L) Left(head.v)
-        else {
-          val before = hits.drop("__graft_dv_f", "__graft_dv_p")
-          val after = before.select(schema.fields.toIndexedSeq.map { f =>
-            setFor.get(f.name.toLowerCase) match {
-              case Some(value) => value.cast(f.dataType).as(f.name)
-              case None => col(f.name)
-            }
-          }: _*)
-          Right(Commit(after, untouched ++ touched, stats,
-            cdf = Some((after, before)),
-            dvNew = Some(dvRowsWith(s, root, touched, hits))))
+      else rowLevelCommit(s, root, head, touched, untouched, mode,
+          keptStats(m), skipIfNoHit = true) { live =>
+        val image = live.schema.fields.toIndexedSeq.collect {
+          case f if !f.name.startsWith("__graft_dv_") =>
+            setFor.get(f.name.toLowerCase).fold(col(f.name))(value =>
+              when(hit, value.cast(f.dataType)).otherwise(col(f.name))).as(f.name)
         }
-      } else {
-        // merged header schema — same rationale as deleteWhereSnapshot
-        val base = readTouched(s, root, m, touched)
-        // the match flag is evaluated on the OLD row image and carried
-        // through the projection — re-evaluating the predicate on
-        // updated values would mislabel rows whose SET changes the very
-        // column the WHERE tests; its name must not collide with a
-        // table that already carries one — suffix until free
-        // (deterministic walk)
-        val hitCol = Iterator.from(0).map(i => s"__graft_hit$i")
-          .find(n => !base.columns.exists(_.equalsIgnoreCase(n))).get
-        val rewritten = base.withColumn(hitCol, hit).select((base.schema.fields.map { f =>
-          setFor.get(f.name.toLowerCase) match {
-            case Some(value) =>
-              when(col(hitCol), value.cast(f.dataType))
-                .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        } :+ col(hitCol)).toIndexedSeq: _*)
-        val after = rewritten.filter(col(hitCol)).drop(hitCol)
-        Right(Commit(rewritten.drop(hitCol), untouched, stats,
-          cdf = Some((after, base.filter(hit)))))
+        val hits = live.filter(hit)
+        RowChange(hits, Some(hits.select(image: _*)), live.select(image: _*))
       }
     }.get
 
-  /** COPY-ON-WRITE MERGE (upsert) as a snapshot version — the
-    * Delta/Iceberg `MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT
-    * MATCHED INSERT` write path, keyed on `keyCol`: rows of the
-    * latest version whose key appears in `updates` are REPLACED by
-    * the update row, keys absent from the store are INSERTED, and
-    * every other row rides along untouched.
+  /** MERGE (upsert) as a snapshot version — the Delta/Iceberg `MERGE
+    * INTO ... WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT` write path,
+    * keyed on `keyCol`: rows of the latest version whose key appears
+    * in `updates` are REPLACED by the update row, keys absent from the
+    * store are INSERTED, and every other row rides along untouched.
     *
     * Scale shape, in order:
     * 1. PLANNING is a metadata join: the version's per-file zone-map
@@ -2358,13 +2357,13 @@ object ScaleOps extends QueryModule {
     *    the batch actually hits — never by corpus or batch size. At
     *    100 TB this is the whole game: a batch updating one day's
     *    docs rewrites that day's files, not the corpus.
-    * 2. REWRITE reads exactly the touched files, drops their rows
-    *    whose key matches an update (one shuffled LEFT ANTI join at
-    *    key grain — null-keyed base rows never match and always
-    *    survive), unions ALL updates (an update key in no touched
-    *    file can be in NO file, so it is exactly the insert set),
-    *    and commits with untouched manifest lines carried forward
-    *    verbatim — stats, Bloom fields and all.
+    * 2. WRITE ([[rowLevelCommit]], merge-on-read or copy-on-write by
+    *    its rule): the touched files' rows whose key matches an update
+    *    are the hit rows (one shuffled join at key grain — null-keyed
+    *    base rows never match), the rest stay, and ALL updates are
+    *    added (an update key in no touched file can be in NO file, so
+    *    it is exactly the insert set). A batch that touches no file is
+    *    a pure insert.
     *
     * `updates` must have UNIQUE keys (checked with one bounded
     * 2-column agg; duplicate keys would make the merge
@@ -2391,6 +2390,19 @@ object ScaleOps extends QueryModule {
     ks
   }
 
+  /** Both MERGE executors' refusal of a batch whose `keys` repeat or
+    * are NULL — one bounded 2-column agg; a repeated key would make
+    * the merge order-dependent (the SQL-standard cardinality rule). */
+  private def requireUniqueKeys(batch: DataFrame, keys: Seq[String],
+      what: String): Unit = {
+    val dup = batch.agg(count(lit(1)).as("n"),
+      count_distinct(col(keys.head), keys.tail.map(col): _*).as("k"))
+      .collect()(0) // bounded: one row
+    require(dup.getLong(0) == dup.getLong(1),
+      s"$what must have unique non-null '${keys.mkString(",")}' keys " +
+        s"(${dup.getLong(0)} rows, ${dup.getLong(1)} distinct keys)")
+  }
+
   /** The commit a MERGE lands on `head` — never a no-op: a batch that
     * touches no file still appends its inserts. */
   private def mergeCommit(s: SparkSession, root: String,
@@ -2400,20 +2412,14 @@ object ScaleOps extends QueryModule {
     // thread plans the touched files: both are fixed-cost Spark jobs
     // over the batch. Its refusal still wins — it is awaited before
     // any planning outcome, failure included, is acted on.
-    val dupCheck = SqlShims.submitCaptured(s) {
-      val dup = updates.agg(count(lit(1)).as("n"),
-        count_distinct(col(keyCols.head),
-          keyCols.tail.map(col): _*).as("k")).collect()(0) // bounded: one row
-      require(dup.getLong(0) == dup.getLong(1),
-        s"merge updates must have unique non-null '${keyCols.mkString(",")}' keys " +
-          s"(${dup.getLong(0)} rows, ${dup.getLong(1)} distinct keys)")
-    }
+    val dupCheck = SqlShims.submitCaptured(s)(
+      requireUniqueKeys(updates, keyCols, "merge updates"))
     val planned: Either[Throwable, Option[MergePlan]] =
       try Right(planMerge(s, root, head, keyCols, updates, evolveSchema))
       catch { case e: Throwable => Left(e) }
     firstFailure(Seq(dupCheck)).orElse(planned.left.toOption)
       .foreach(e => throw e)
-    val MergePlan(m, keepStats, anyBounds, touched, untouched) =
+    val MergePlan(keepStats, anyBounds, touched, untouched) =
       planned.toOption.get.getOrElse {
         // merging into an empty store bootstraps it: everything is an
         // insert, so v1 = the batch (the CREATE TABLE AS face of MERGE)
@@ -2422,41 +2428,18 @@ object ScaleOps extends QueryModule {
     val stats = if (anyBounds) keepStats else Nil
     if (touched.isEmpty) return Right(Commit(updates, untouched, stats, tag,
       cdf = Some((updates, updates.limit(0)))))
-    if (morChosen(s, mode, touched.size, m.entries.size)) {
-      // MERGE-ON-READ upsert — the CDC-sink write-amplification fix:
-      // matched preimages become DV positions, the WHOLE batch lands
-      // as new appended files (replaced keys' new images + inserts),
-      // and NOT ONE touched file is rewritten. A steady stream of
-      // small upserts now costs O(batch) writes per trigger instead
-      // of O(touched files); compaction materializes the DVs away on
-      // its own cadence, exactly like the small-file tail.
-      val live = readTouchedWithPos(s, root, m, touched)
-      val matchedRows = live.join(updates.select(keyCols.map(col): _*),
-        keyCols, "left_semi")
-      return Right(Commit(updates, untouched ++ touched, stats, tag,
-        cdf = Some((updates, matchedRows.drop("__graft_dv_f", "__graft_dv_p"))),
-        dvNew = Some(dvRowsWith(s, root, touched, matchedRows))))
-    }
-    // version's merged header schema: post-evolution, touched files
-    // may disagree on columns among themselves — the header schema
-    // null-fills whatever any file physically lacks (planMerge's
-    // require already decided whether NEW columns are allowed in)
-    val base = readTouched(s, root, m, touched)
-    val survivors = base.join(updates.select(keyCols.map(col): _*),
-      keyCols, "left_anti")
-    // CDF decomposes an update into delete(preimage) + insert(row):
-    // replaced = touched-file rows whose key a batch row matches
-    val replaced = base.join(updates.select(keyCols.map(col): _*),
-      keyCols, "left_semi")
-    Right(Commit(survivors.unionByName(updates, allowMissingColumns = true),
-      untouched, stats, tag, cdf = Some((updates, replaced))))
+    val keys = updates.select(keyCols.map(col): _*)
+    // a replaced row's change is delete(preimage) + insert(update row)
+    rowLevelCommit(s, root, head, touched, untouched, mode, stats, tag)(live =>
+      RowChange(live.join(keys, keyCols, "left_semi"), Some(updates),
+        live.join(keys, keyCols, "left_anti")
+          .unionByName(updates, allowMissingColumns = true)))
   }
 
-  /** What [[mergeCommit]] plans against the head: its listing, the
-    * stats columns a rewrite keeps, whether any key carries zone maps,
-    * and the key-touched / untouched split. */
-  private case class MergePlan(m: Manifest.Listing,
-      keepStats: Seq[String], anyBounds: Boolean,
+  /** What [[mergeCommit]] plans against the head: the stats columns a
+    * rewrite keeps, whether any key carries zone maps, and the
+    * key-touched / untouched split. */
+  private case class MergePlan(keepStats: Seq[String], anyBounds: Boolean,
       touched: Seq[ManifestEntry], untouched: Seq[ManifestEntry])
 
   /** The planning half of [[mergeCommit]]; None for an empty store. */
@@ -2480,15 +2463,13 @@ object ScaleOps extends QueryModule {
     // the VERSION's merged one: its `#schema:` header, or for a
     // pre-header manifest the mergeSchema footer sweep — post-
     // evolution files legitimately disagree column-wise.
-    val storeCols = m.headers.schema.map(_.fieldNames.toSeq).getOrElse(
-      readLinesDv(s, root, m.entries, schema = None, merged = true).columns.toSeq)
-    val newCols = updates.columns.toSet -- storeCols
+    val newCols = updates.columns.toSet -- storeSchema(s, root, m).fieldNames
     require(evolveSchema || newCols.isEmpty,
       s"merge batch carries columns the store lacks (${newCols.mkString(",")}); " +
         "pass evolveSchema=true to evolve, or project them away")
     val (touched, untouched) = keysTouchedLines(s, m, updates,
       keyCols.map(k => k -> k))
-    Some(MergePlan(m, keepStats, anyBounds, touched, untouched))
+    Some(MergePlan(keepStats, anyBounds, touched, untouched))
   }
 
   /** Batch-tagged IDEMPOTENT merge — [[snapshotAppendOnce]]'s
@@ -2561,12 +2542,12 @@ object ScaleOps extends QueryModule {
   private[graft] case class GeneralMergeClause(kind: String,
       condition: Option[Column], assigns: Seq[(String, Column)])
 
-  /** GENERAL COPY-ON-WRITE MERGE — the full SQL MERGE shape family
-    * (clause conditions, `WHEN MATCHED … THEN DELETE`, partial SET
-    * lists, several WHEN clauses in order), which is what applying a
-    * CDC insert/update/delete envelope as ONE statement needs
-    * (reference: BaseDBApp.java:52-62's type field routed row-grain —
-    * here `WHEN MATCHED AND s.type='delete' THEN DELETE`):
+  /** GENERAL MERGE — the full SQL MERGE shape family (clause
+    * conditions, `WHEN MATCHED … THEN DELETE`, partial SET lists,
+    * several WHEN clauses in order), which is what applying a CDC
+    * insert/update/delete envelope as ONE statement needs (reference:
+    * BaseDBApp.java:52-62's type field routed row-grain — here
+    * `WHEN MATCHED AND s.type='delete' THEN DELETE`):
     *
     * {{{
     *   MERGE INTO cat.t USING batch s ON t.k = s.k
@@ -2577,16 +2558,18 @@ object ScaleOps extends QueryModule {
     *
     * Same scale shape as [[mergeIntoSnapshot]] — zone-map planning
     * picks the touched files, untouched manifest lines carry forward
-    * verbatim — with the row rewrite generalized to SQL MERGE
-    * semantics: one full-outer join of the touched rows against the
-    * batch at key grain, each row routed by the FIRST clause whose
-    * condition is TRUE (a NULL condition keeps/drops per the
-    * WHEN-clause contract, exactly like WHERE), matched rows with no
-    * firing clause ride along unchanged, source rows with no firing
-    * NOT MATCHED clause are discarded. Partial SET lists update ONLY
-    * the assigned columns — every other column carries the target's
-    * value — and INSERT lists null-fill unassigned columns. The
-    * commit lands with a change feed decomposing updates into
+    * verbatim, [[rowLevelCommit]] writes merge-on-read or
+    * copy-on-write by its rule — with the row change generalized to
+    * SQL MERGE semantics: one full-outer join of the touched rows
+    * against the batch at key grain, each row routed by the FIRST
+    * clause whose condition is TRUE (a NULL condition keeps/drops per
+    * the WHEN-clause contract, exactly like WHERE). Target rows a
+    * clause fires on are hit; matched rows with no firing clause stay
+    * unchanged; update post-images and inserts are added; source rows
+    * with no firing NOT MATCHED clause are discarded. Partial SET
+    * lists update ONLY the assigned columns — every other column
+    * carries the target's value — and INSERT lists null-fill
+    * unassigned columns. The change feed decomposes updates into
     * delete(preimage)/insert(postimage) rows. Source keys must be
     * unique (order-dependent multi-matches refuse loudly, the
     * SQL-standard cardinality rule). Returns the committed version. */
@@ -2598,142 +2581,108 @@ object ScaleOps extends QueryModule {
       mode: String = "auto",
       evolved: Option[StructType] = None): Long = {
     require(keys.nonEmpty, "general MERGE needs at least one key pair")
-    val srcKeyCols = keys.map(_._2)
-    val dup = updates.agg(count(lit(1)).as("n"),
-      count_distinct(col(srcKeyCols.head),
-        srcKeyCols.tail.map(col): _*).as("k")).collect()(0) // bounded: one row
-    require(dup.getLong(0) == dup.getLong(1),
-      s"merge source must have unique non-null '${srcKeyCols.mkString(",")}' " +
-        s"keys (${dup.getLong(0)} rows, ${dup.getLong(1)} distinct keys)")
+    requireUniqueKeys(updates, keys.map(_._2), "merge source")
     transact(s, root, dmlGuard = true) { head =>
       require(head.v >= 1L, s"no committed snapshots under $root — " +
         "CREATE the table (or publish v1) before a general MERGE")
       val m = head.listing
       val keepStats = (m.statsColumns ++ keys.map(_._1)).distinct
       val anyBounds = keys.exists(k => m.bounds(k._1).nonEmpty)
-      val headerSchema = m.headers.schema.getOrElse(
-        readLinesDv(s, root, m.entries, schema = None, merged = true).schema)
       // EVOLVE-ON-MERGE for the general shapes: `evolved` appends the
       // statement's NEW target columns (source columns the store
       // lacks, star-expanded or analyzer-evolved) — rewritten/kept
       // rows null-fill them, untouched files stay physically
       // column-free, and the commit's merged `#schema:` header evolves
       // the store exactly like the canonical upsert's path.
+      val headerSchema = storeSchema(s, root, m)
       val schema = evolved.fold(headerSchema)(ev =>
         mergeSchemas(headerSchema, allNullable(ev)))
       // NOT MATCHED BY SOURCE clauses act on target rows whose key is
       // ABSENT from the batch — which can live in ANY file, so the
       // key-zone planning cannot bound the rewrite: every line is
       // touched by construction ("make target mirror source" IS a full
-      // rewrite). Without such clauses the zone maps bound it as ever.
+      // rewrite), and copy-on-write is its materialization. Without
+      // such clauses the zone maps bound it as ever.
       val (touched, untouched) =
         if (bySource.nonEmpty) (m.entries, Seq.empty[ManifestEntry])
         else keysTouchedLines(s, m, updates, keys)
-      // MERGE-ON-READ for the general shapes too (bySource excluded —
-      // its rewrite is every file by definition, so CoW IS the right
-      // materialization): fired-on target rows become DV positions,
-      // updated post-images and inserts append, ride-along rows stay
-      // in their files — the CDC envelope's per-trigger write drops to
-      // O(batch) exactly like the canonical upsert's.
-      val useMor = bySource.isEmpty && touched.nonEmpty &&
-        morChosen(s, mode, touched.size, m.entries.size)
-      val base =
-        if (touched.isEmpty)
-          s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            schema)
-        else if (useMor) readTouchedWithPos(s, root, m, touched)
-        else readTouched(s, root, m, touched)
-      val clash = (base.columns.filterNot(_.startsWith("__graft_dv_")) ++
-        updates.columns).filter(c =>
-        c.startsWith("__t_") || c.startsWith("__s_") || c == "__graft_act")
-      require(clash.isEmpty,
-        s"general MERGE reserves __t_/__s_/__graft_act column names; " +
-          s"rename: ${clash.mkString(", ")}")
-      // position columns (MoR) ride UNprefixed beside the __t_ images;
-      // evolved columns the touched files physically lack null-fill
-      // here so every routed output column has a target image to keep
-      val missing = schema.fields.toIndexedSeq.filterNot(f =>
-        base.columns.exists(_.equalsIgnoreCase(f.name)))
-      val t = base.select(base.columns.map(c =>
-        if (c.startsWith("__graft_dv_")) col(c)
-        else col(c).as(s"__t_$c")).toSeq ++
-        missing.map(f => lit(null).cast(f.dataType).as(s"__t_${f.name}")) :+
-        lit(true).as("__t_p"): _*)
-      val u = updates.select(
-        updates.columns.map(c => col(c).as(s"__s_$c")).toSeq :+
-          lit(true).as("__s_p"): _*)
-      val j = t.join(u, keys.map { case (tk, sk) =>
-          col(s"__t_$tk") === col(s"__s_$sk")
-        }.reduce(_ && _), "full_outer")
-      // Row routing: action codes — MATCHED update clause i → i, NOT
-      // MATCHED insert clause i → 1000+i, NOT MATCHED BY SOURCE update
-      // clause i → 2000+i, any DELETE → -2 (drop), no clause fires →
-      // -1 (matched/target-only rows KEEP; source-only rows DROP).
-      // when() treats a NULL clause condition as not firing, the WHERE
-      // contract.
-      def chainOf(cls: Seq[GeneralMergeClause], base: Int,
-          dflt: Column): Column =
-        cls.zipWithIndex.foldRight(dflt) { case ((cl, i), els) =>
-          val code = cl.kind match {
-            case "delete" => -2
-            case _ => base + i
+      rowLevelCommit(s, root, head, touched, untouched,
+          if (bySource.nonEmpty) "cow" else mode,
+          if (anyBounds) keepStats else Nil) { base =>
+        val clash = (base.columns.filterNot(_.startsWith("__graft_dv_")) ++
+          updates.columns).filter(c =>
+          c.startsWith("__t_") || c.startsWith("__s_") || c == "__graft_act")
+        require(clash.isEmpty,
+          s"general MERGE reserves __t_/__s_/__graft_act column names; " +
+            s"rename: ${clash.mkString(", ")}")
+        // position columns (merge-on-read) ride UNprefixed beside the
+        // __t_ images; evolved columns the touched files physically
+        // lack null-fill here so every routed output column has a
+        // target image to keep
+        val pos = base.columns.filter(_.startsWith("__graft_dv_")).map(col).toSeq
+        val missing = schema.fields.toIndexedSeq.filterNot(f =>
+          base.columns.exists(_.equalsIgnoreCase(f.name)))
+        val t = base.select(base.columns.map(c =>
+          if (c.startsWith("__graft_dv_")) col(c)
+          else col(c).as(s"__t_$c")).toSeq ++
+          missing.map(f => lit(null).cast(f.dataType).as(s"__t_${f.name}")) :+
+          lit(true).as("__t_p"): _*)
+        val u = updates.select(
+          updates.columns.map(c => col(c).as(s"__s_$c")).toSeq :+
+            lit(true).as("__s_p"): _*)
+        val j = t.join(u, keys.map { case (tk, sk) =>
+            col(s"__t_$tk") === col(s"__s_$sk")
+          }.reduce(_ && _), "full_outer")
+        // Row routing: action codes — MATCHED update clause i → i, NOT
+        // MATCHED insert clause i → 1000+i, NOT MATCHED BY SOURCE
+        // update clause i → 2000+i, any DELETE → -2 (drop), no clause
+        // fires → -1 (matched/target-only rows KEEP; source-only rows
+        // DROP). when() treats a NULL clause condition as not firing,
+        // the WHERE contract.
+        def chainOf(cls: Seq[GeneralMergeClause], base: Int,
+            dflt: Column): Column =
+          cls.zipWithIndex.foldRight(dflt) { case ((cl, i), els) =>
+            val code = cl.kind match {
+              case "delete" => -2
+              case _ => base + i
+            }
+            when(cl.condition.getOrElse(lit(true)), lit(code)).otherwise(els)
           }
-          when(cl.condition.getOrElse(lit(true)), lit(code)).otherwise(els)
+        val act = when(col("__t_p").isNotNull && col("__s_p").isNotNull,
+            chainOf(matched, 0, lit(-1)))
+          .when(col("__s_p").isNotNull, chainOf(notMatched, 1000, lit(-2)))
+          .otherwise(chainOf(bySource, 2000, lit(-1)))
+        val jA = j.withColumn("__graft_act", act)
+        def assignFor(cl: GeneralMergeClause,
+            f: StructField): Option[Column] =
+          cl.assigns.find(_._1.equalsIgnoreCase(f.name)).map(_._2)
+        val outCols = schema.fields.toIndexedSeq.map { f =>
+          val keep = col(s"__t_${f.name}")
+          val routed = (matched.zipWithIndex.collect {
+            case (cl, i) if cl.kind == "update" =>
+              i -> assignFor(cl, f).getOrElse(keep)
+          } ++ notMatched.zipWithIndex.map { case (cl, i) =>
+            (1000 + i) -> assignFor(cl, f)
+              .getOrElse(lit(null).cast(f.dataType))
+          } ++ bySource.zipWithIndex.collect {
+            case (cl, i) if cl.kind == "update" =>
+              (2000 + i) -> assignFor(cl, f).getOrElse(keep)
+          }).foldRight(keep: Column) { case ((code, value), els) =>
+            when(col("__graft_act") === lit(code), value).otherwise(els)
+          }
+          routed.cast(f.dataType).as(f.name)
         }
-      val act = when(col("__t_p").isNotNull && col("__s_p").isNotNull,
-          chainOf(matched, 0, lit(-1)))
-        .when(col("__s_p").isNotNull, chainOf(notMatched, 1000, lit(-2)))
-        .otherwise(chainOf(bySource, 2000, lit(-1)))
-      val jA = j.withColumn("__graft_act", act)
-      val alive = jA.filter(col("__graft_act") =!= lit(-2))
-      def assignFor(cl: GeneralMergeClause,
-          f: StructField): Option[Column] =
-        cl.assigns.find(_._1.equalsIgnoreCase(f.name)).map(_._2)
-      val outCols = schema.fields.toIndexedSeq.map { f =>
-        val keep = col(s"__t_${f.name}")
-        val routed = (matched.zipWithIndex.collect {
-          case (cl, i) if cl.kind == "update" =>
-            i -> assignFor(cl, f).getOrElse(keep)
-        } ++ notMatched.zipWithIndex.map { case (cl, i) =>
-          (1000 + i) -> assignFor(cl, f)
-            .getOrElse(lit(null).cast(f.dataType))
-        } ++ bySource.zipWithIndex.collect {
-          case (cl, i) if cl.kind == "update" =>
-            (2000 + i) -> assignFor(cl, f).getOrElse(keep)
-        }).foldRight(keep: Column) { case ((code, value), els) =>
-          when(col("__graft_act") === lit(code), value).otherwise(els)
-        }
-        routed.cast(f.dataType).as(f.name)
+        // hit: every target row a clause FIRED on (updated or deleted)
+        // leaves as its preimage; added: the rows a clause REPLACED or
+        // CREATED; rewritten: every row no DELETE dropped
+        val preCols = schema.fields.toIndexedSeq.map(f =>
+          col(s"__t_${f.name}").cast(f.dataType).as(f.name))
+        RowChange(
+          jA.filter(col("__t_p").isNotNull && col("__graft_act") =!= lit(-1))
+            .select(preCols ++ pos: _*),
+          Some(jA.filter(col("__graft_act") >= lit(0)).select(outCols: _*)),
+          jA.filter(col("__graft_act") =!= lit(-2)).select(outCols: _*))
       }
-      // MoR: only rows a clause REPLACED or CREATED are written (the
-      // update/insert post-images); keeps stay in their files. CoW:
-      // every surviving row of the touched files is rewritten.
-      val result =
-        if (useMor) alive.filter(col("__graft_act") >= lit(0))
-          .select(outCols: _*)
-        else alive.select(outCols: _*)
-      // change feed: updated/deleted preimages out, updated postimages
-      // and inserts in (compaction-style empty sides when a clause
-      // family is absent)
-      val preCols = schema.fields.toIndexedSeq.map(f =>
-        col(s"__t_${f.name}").cast(f.dataType).as(f.name))
-      val updIdx = matched.zipWithIndex.collect {
-        case (cl, i) if cl.kind == "update" => i } ++
-        bySource.zipWithIndex.collect {
-          case (cl, i) if cl.kind == "update" => 2000 + i }
-      val deletedPre = jA.filter(col("__t_p").isNotNull &&
-          (col("__graft_act") === lit(-2) ||
-            col("__graft_act").isin(updIdx.map(Int.box): _*)))
-        .select(preCols: _*)
-      val insertedPost = alive.filter(col("__graft_act") >= lit(0))
-        .select(outCols: _*)
-      val c = Commit(result, untouched, if (anyBounds) keepStats else Nil,
-        cdf = Some((insertedPost, deletedPre)))
-      // MoR: every target row a clause FIRED on leaves its file via a
-      // DV position (updates move to new files, deletes just go)
-      Right(if (!useMor) c else c.copy(parentLines = untouched ++ touched,
-        dvNew = Some(dvRowsWith(s, root, touched, jA.filter(
-          col("__t_p").isNotNull && col("__graft_act") =!= lit(-1))))))
     }.get
   }
 

@@ -12,10 +12,12 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** SQL `MERGE INTO`, `UPDATE` and (non-pushable-WHERE) `DELETE` on
-  * snapshot-catalog tables, resolved to the engine's own
-  * copy-on-write rewrites ([[ScaleOps.mergeIntoSnapshot]],
+  * snapshot-catalog tables, resolved to the engine's own row-level
+  * writes ([[ScaleOps.mergeIntoSnapshot]],
   * [[ScaleOps.mergeGeneralSnapshot]], [[ScaleOps.updateWhereSnapshot]],
-  * [[ScaleOps.deleteWhereSnapshot]] — commit protocol and all).
+  * [[ScaleOps.deleteWhereSnapshot]] — commit protocol and all), each
+  * merge-on-read or copy-on-write by the one rule of
+  * `ScaleOps.rowLevelCommit`.
   *
   * Spark's generic row-level-operation rewrite needs
   * SupportsRowLevelOperations; the store instead routes MERGE through
@@ -49,8 +51,8 @@ case class ResolveSnapshotMerge(spark: SparkSession)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperators {
-      // SQL UPDATE — the same copy-on-write rewrite discipline as
-      // SupportsDelete: condition → pushed-filter constraints →
+      // SQL UPDATE — the same row-level planning as SupportsDelete:
+      // condition → pushed-filter constraints →
       // candidate files; assignments applied only to matching rows.
       case u: UpdateTable if snapshotTarget(u.table).isDefined &&
           u.table.resolved && u.assignments.forall(_.resolved) &&
@@ -306,7 +308,7 @@ case class SnapshotMergeClause(kind: String,
     condition: Option[Expression], assigns: Seq[(String, Expression)])
 
 /** The resolved MERGE as a driver command: materialize the source
-  * plan, hand it to the engine's copy-on-write upsert. The command
+  * plan, hand it to the engine's row-level upsert. The command
   * is leaf-shaped (the source rides as an inner child) so the
   * analyzer stops rewriting it; the heavy lifting — zone-map file
   * planning, key-grain anti join, race-safe commit — happens inside
@@ -358,8 +360,8 @@ case class MergeIntoSnapshotGeneralCommand(root: String,
   }
 }
 
-/** The resolved UPDATE as a driver command — the copy-on-write
-  * rewrite behind SQL `UPDATE cat.t SET … WHERE …`, sharing the
+/** The resolved UPDATE as a driver command — the row-level
+  * write behind SQL `UPDATE cat.t SET … WHERE …`, sharing the
   * DELETE path's candidate planning: each WHERE conjunct that
   * translates to a data-source Filter (the language the scan builder
   * maps into stat-space constraints — reused verbatim) PRUNES the

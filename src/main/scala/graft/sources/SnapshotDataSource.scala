@@ -69,7 +69,7 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister
   /** Exactly-once ingest as the DEFAULT path, not a foreachBatch
     * recipe: each micro-batch commits ONE `batch:<id>`-tagged version
     * through the idempotent append (or, with a `mergeKey` option, the
-    * idempotent copy-on-write upsert) — an at-least-once replay of a
+    * idempotent upsert) — an at-least-once replay of a
     * batch the store already committed is absorbed by the tag probe,
     * the [[graft.streaming.Jobs.snapshotIngest]] discipline verbatim.
     * `statsCol` defaults to the store's own `#statscols:` header so
@@ -303,7 +303,7 @@ class SnapshotTable(private[graft] val root: String,
   }
 
   /** SQL `DELETE FROM cat.t WHERE …` — SupportsDelete routes the
-    * pushed filters to the zone-map-planned copy-on-write delete:
+    * pushed filters to the zone-map-planned row-level delete:
     * the SAME stat-space constraints a pruned READ would derive from
     * these filters decide which files can hold matching rows (the
     * rest carry their manifest lines forward verbatim, data unread),

@@ -612,7 +612,7 @@ object Jobs {
     * Debezium-after-image shape, the reference's dim-upsert sink
     * semantics at lakehouse grain: gmall-realtime's
     * DimSink/phoenix upsert, re-expressed as versioned MERGE): each
-    * micro-batch is merged copy-on-write into the snapshot store —
+    * micro-batch is merged into the snapshot store —
     * matched keys replaced, new keys inserted, untouched files
     * carried — as one tagged version. Idempotent under foreachBatch's
     * at-least-once replay (the tag probe absorbs a re-delivered

@@ -27,8 +27,6 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     ("graft/operators/ScaleOps.scala",
       """s.read.option("mergeSchema", "true").parquet(files: _*)""") -> merging,
     ("graft/operators/ScaleOps.scala",
-      """case None => s.read.option("mergeSchema", "true")""") -> merging,
-    ("graft/operators/ScaleOps.scala",
       """s.read.option("mergeSchema", "true").parquet(m.files: _*)""") -> merging,
     ("graft/sources/SnapshotDataSource.scala",
       """s.read.option("mergeSchema", "true").parquet(files: _*).schema""") -> merging)

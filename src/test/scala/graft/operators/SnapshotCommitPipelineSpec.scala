@@ -184,8 +184,26 @@ class SnapshotCommitPipelineSpec extends SparkSpec {
     // copy-on-write range delete: empty ins, del = the deleted rows
     val v5 = ScaleOps.deleteFromSnapshot(spark, root, "id", 10L, 19L)
     assert(feed(v5) === (Nil, preimages(4L, 10L to 19L)))
+    // merge-on-read delete: same feed, a deletion vector instead of a rewrite
+    val v6 = ScaleOps.deleteWhereSnapshot(spark, root, col("id").between(20L, 24L),
+      Seq(ScaleOps.ColConstraint("id", Some(20L), Some(24L), None)), mode = "mor")
+    assert(ScaleOps.snapshotHasDvs(spark, root, v6))
+    assert(feed(v6) === (Nil, preimages(v5, 20L to 24L)))
+    // UPDATEs whose SET moves rows out of their own WHERE: ins = the
+    // post-images of exactly the rows the WHERE hit, del = their preimages
+    def updated(v: Long, lo: String, mode: String): Long = {
+      val hit = rows(ScaleOps.readSnapshot(spark, root, Some(v))).filter(_._2 >= lo)
+      assert(hit.nonEmpty)
+      val next = ScaleOps.updateWhereSnapshot(spark, root, col("s") >= lo,
+        Seq("s" -> lit("low")), Nil, mode = mode)
+      assert(next === v + 1L)
+      assert(feed(next) === (hit.map(r => (r._1, "low")), hit))
+      next
+    }
+    val v7 = updated(v6, "r39", "mor")
+    val v8 = updated(v7, "r38", "cow")
     // the feed replays the store: v1 + every hop's feed = the head
-    val replayed = (2L to v5).foldLeft(rows(ScaleOps.readSnapshot(spark, root, Some(1L))).toMap) {
+    val replayed = (2L to v8).foldLeft(rows(ScaleOps.readSnapshot(spark, root, Some(1L))).toMap) {
       (st, v) => val (ins, del) = feed(v); st -- del.map(_._1) ++ ins
     }
     assert(replayed.toSeq.sortBy(_._1) === rows(ScaleOps.readSnapshot(spark, root)))
